@@ -4,9 +4,14 @@ shared session — a subprocess would pay a second JVM boot)."""
 
 from __future__ import annotations
 
+import glob
+import re
+
 import pytest
 
+import wordcount_spark.sources.sinks as sinks
 from wordcount_spark.__main__ import main
+from wordcount_spark.plans.explain import formatted_plan
 
 
 @pytest.fixture()
@@ -55,3 +60,52 @@ def test_cli_per_file_grouping(spark, corpus, capsys):
     joined = "\n".join(out)
     assert f"{a_name}/the: 2" in joined
     assert f"{b_name}/the: 2" in joined
+
+
+def _file_lines(out_dir: str) -> list[str]:
+    parts = sorted(glob.glob(out_dir + "/part-*"))
+    return "".join(open(p).read() for p in parts).splitlines()
+
+
+def test_cli_no_words_still_prints_header(spark, tmp_path, capsys):
+    # every token normalizes to "": the header lines survive with zeros
+    p = tmp_path / "punct.txt"
+    p.write_text(" ... !!! ,,\n\n  \t\n")
+    assert main([str(p)], spark=spark) == 0
+    assert capsys.readouterr().out.splitlines() == [f"Filename: {p}, total words: 0"]
+    out_dir = str(tmp_path / "out")
+    assert main([str(p), "--out", out_dir], spark=spark) == 0
+    assert _file_lines(out_dir) == [f"Filename: {p}", "Unique words found: 0"]
+
+
+def test_cli_per_file_ranks_by_source_then_word(spark, tmp_path):
+    # as labels "a.txt-b/alpha" < "a.txt/zeta" ('-' sorts before '/'), but
+    # the rank orders by source first, then word
+    a, b = tmp_path / "a.txt", tmp_path / "a.txt-b"
+    a.write_text("zeta\n")
+    b.write_text("alpha\n")
+    out_dir = str(tmp_path / "out")
+    assert main([str(a), str(b), "--per-file", "--out", out_dir], spark=spark) == 0
+    assert _file_lines(out_dir) == [
+        f"Filename: {a}",
+        "Unique words found: 2",
+        "[0] a.txt/zeta: 1",
+        "[1] a.txt-b/alpha: 1",
+    ]
+
+
+def test_cli_output_plan_scans_corpus_once(spark, corpus, tmp_path, monkeypatch):
+    # rank, total and unique count all come from the one scan; a second
+    # branch over the counts (e.g. a union of ranked.agg(count)) would read
+    # the corpus again
+    plans = []
+    write = sinks.write_reference_output
+
+    def record(lines, out_path):
+        plans.append(formatted_plan(lines))
+        write(lines, out_path)
+
+    monkeypatch.setattr(sinks, "write_reference_output", record)
+    assert main([*corpus, "--out", str(tmp_path / "out")], spark=spark) == 0
+    assert len(plans) == 1
+    assert len(re.findall(r"^\(\d+\) Scan text", plans[0], re.M)) == 1

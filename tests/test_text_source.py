@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from wordcount_spark.operators.wordcount import words_from_text
 from wordcount_spark.sources.readers import load_text_corpus
-from wordcount_spark.sources.sinks import write_reference_output
+from wordcount_spark.sources.sinks import reference_lines, write_reference_output
 
 
 def _corpus(tmp_path):
@@ -48,19 +48,13 @@ def test_reference_file_sink(spark, tmp_path):
     paths = _corpus(tmp_path)
     df = load_text_corpus(spark, paths)
     counts = words_from_text(df.select("text")).groupBy("word").agg(F.count("*").alias("cnt"))
-    ranked = (
-        counts.orderBy("word")
-        .rdd.zipWithIndex()
-        .map(lambda p: (int(p[1]), p[0]["word"], int(p[0]["cnt"])))
-        .toDF(["rank_idx", "word", "cnt"])
-    )
     out = str(tmp_path / "out")
-    write_reference_output(ranked, out, "a.txt", unique_line=True)
+    write_reference_output(reference_lines(counts, "a.txt", ["word"], unique_line=True), out)
     import glob
 
     parts = sorted(glob.glob(out + "/part-*"))
-    text = "".join(open(p).read() for p in parts)
-    lines = text.splitlines()
+    assert len(parts) == 1
+    lines = open(parts[0]).read().splitlines()
     assert lines[0] == "Filename: a.txt"
     assert lines[1] == "Unique words found: 6"
     assert lines[2] == "[0] caf: 1"

@@ -78,3 +78,14 @@ def test_words_from_text_preserves_columns(spark):
     df = spark.createDataFrame([("Hello, WORLD!! ...", "en")], ["text", "lang"])
     rows = words_from_text(df).collect()
     assert {(r["word"], r["lang"]) for r in rows} == {("hello", "en"), ("world", "en")}
+
+
+def test_normalize_runs_above_first_aggregate(spark, sf_dir):
+    # Vocabulary pre-aggregation only pays if the normalizer's regex runs
+    # per distinct raw token: no Filter evaluating it may sit below the
+    # first (raw-token) Aggregate, where it would run once per token.
+    plan = word_count(spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
+    lines = plan.splitlines()
+    first_agg = max(i for i, line in enumerate(lines) if "Aggregate [" in line)
+    below = lines[first_agg + 1:]
+    assert not [line for line in below if "Filter" in line and "regexp_replace" in line]

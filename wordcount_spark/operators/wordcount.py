@@ -89,7 +89,11 @@ def count_words(df: DataFrame, text_col: str = "text", mode: str = "head",
     The explode feeds a PLAIN split array — no higher-order filter for the
     ""-tokens a leading/trailing-whitespace split emits (HOF lambdas run
     interpreted, outside codegen). All empty raw tokens collapse into one
-    vocabulary row in the first agg and die in the existing length filter.
+    vocabulary row in the first agg, and so does every raw token that
+    normalizes to "". The empty word is dropped AFTER the second agg: its
+    ``cnt`` sums no kept rows and is null. A plain ``length(word) > 0``
+    filter would be pushed by Catalyst below the first agg (it only reads a
+    grouping key), running the regex once per token again.
     """
     keys = list(group_cols or [])
     raw = (
@@ -100,9 +104,9 @@ def count_words(df: DataFrame, text_col: str = "text", mode: str = "head",
     )
     return (
         raw.withColumn("word", normalize_word(F.col("__tok"), mode=mode))
-        .filter(F.length("word") > 0)
         .groupBy(*keys, "word")
-        .agg(F.sum("__c").alias("cnt"))
+        .agg(F.sum(F.when(F.length("word") > 0, F.col("__c"))).alias("cnt"))
+        .filter(F.col("cnt").isNotNull())
     )
 
 

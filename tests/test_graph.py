@@ -6,12 +6,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
+from wordcount_spark.operators.caching import bounded_cache
 from wordcount_spark.registry import get_queries
 from wordcount_spark.sources.readers import load_table
 
 
 def test_pagerank_shape(spark):
-    ranks = get_queries()["graph_pagerank_parts"](spark, SF_DIR).cache()
+    ranks = bounded_cache(get_queries()["graph_pagerank_parts"](spark, SF_DIR))
     n = load_table(spark, SF_DIR, "part").count()
     assert ranks.count() == n  # every part is a node, connected or not
 
@@ -38,7 +39,6 @@ def test_pagerank_shape(spark):
     # dangling mass, so it's strictly below 1 when isolated nodes exist)
     total = ranks.agg(F.sum("rank")).collect()[0][0]
     assert 0.5 < total <= 1.000001
-    ranks.unpersist()
 
 
 def test_triangle_count_matches_naive_ordering(spark):
@@ -52,7 +52,7 @@ def test_triangle_count_matches_naive_ordering(spark):
 
     row = graph_triangle_count(spark, SF_DIR).collect()[0]
 
-    und = _undirected_copurchase(spark, SF_DIR).cache()
+    und = bounded_cache(_undirected_copurchase(spark, SF_DIR))
     e1, e2, e3 = und.alias("e1"), und.alias("e2"), und.alias("e3")
     naive = (
         e1.join(

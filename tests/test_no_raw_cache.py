@@ -1,20 +1,23 @@
-"""Mechanical enforcement: no raw ``.cache()`` in package source.
+"""Cache pins are scoped to the query that made them.
 
 Query functions return lazy frames and cannot unpersist after the
-consuming job, so raw ``.cache()`` pins accumulate in the block manager
-over registry-wide sweeps (stability_check runs every query twice; the
-driver sim runs all of them). ADVICE r3 flagged one instance; r4 closed
-the class: every shared-frame pin goes through
-``operators/caching.bounded_cache`` (session-wide FIFO, oldest evicted —
-eviction just recomputes, never corrupts).
+consuming job, so every shared-frame pin in package source goes through
+``operators/caching.bounded_cache`` (the static scan below), and
+``registry.get_queries()`` releases those pins before each build. No pin
+survives into the next query, so Spark's CacheManager cannot substitute
+one query's cached fragment into another's plan: a plan no longer
+depends on which queries ran before it in the session.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
-PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   "wordcount_spark")
+import pytest
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(REPO, "wordcount_spark")
 
 
 def test_no_raw_cache_outside_caching_module():
@@ -34,124 +37,65 @@ def test_no_raw_cache_outside_caching_module():
                 ):
                     offenders.append(f"{path}:{i}")
     assert not offenders, (
-        "raw .cache() pins accumulate over long sessions — route through "
+        "raw .cache() pins outlive their query — route through "
         f"operators/caching.bounded_cache instead: {offenders}"
     )
 
 
-def test_pin_count_bounded_under_repeated_lsh_indexing(spark, sf_dir):
-    """Runtime pin-count regression (VERDICT r4 item 3): calling the LSH
-    index builder far more times than PIN_MAX must leave at most PIN_MAX
-    frames pinned in the block manager — the FIFO evicts the oldest, so
-    registry-wide sweeps (stability_check runs every query twice) cannot
-    accumulate MEMORY_AND_DISK pins without bound."""
-    from wordcount_spark.operators import caching
-    from wordcount_spark.operators.dedup import lsh_banded_index, minhash_signatures_arr
-    from wordcount_spark.sources.readers import load_table
+@pytest.mark.parametrize(
+    "leaker, target",
+    [
+        # the hourly aggregate pin dropped interpolate's pushdown
+        ("events_resample_ffill", "events_resample_interpolate"),
+        # the shingle pin replaced six scans and their pushed filters
+        ("dedup_ngram_jaccard", "eval_minhash_jaccard_calibration"),
+        # the adjacency pin moved the walk's shuffles
+        ("graph_triangle_count", "graph_walks_deterministic"),
+        # a minhash LSH pin added a scan
+        ("dedup_minhash_lsh", "eval_lsh_candidate_recall"),
+        # the per-language count pin replaced a scan and a shuffle
+        ("mix_rebalance_to_min", "mix_temperature_weights"),
+        # a renamed twin of the hourly pin came back under the wrong
+        # column names
+        ("events_gapfill_hourly", "events_rollup_multigrain"),
+    ],
+)
+def test_plan_independent_of_previous_query(spark, leaker, target):
+    """Built right after a query whose pin matches part of its plan (as
+    in a registry sweep), the target still plans exactly as its committed
+    cold signature."""
+    from tools.gen_plan_signatures import plan_signature
+    from wordcount_spark.plans.explain import formatted_plan
+    from wordcount_spark.registry import get_queries
 
-    docs = load_table(spark, sf_dir, "documents")
-    # drain pins carried over from other test files so the loop below owns
-    # every FIFO slot it fills (eviction is always safe by design)
-    while caching._pins:
-        try:
-            caching._pins.popitem(last=False)[1].unpersist()
-        except Exception:
-            pass
-    # getPersistentRDDs also counts session-lingering localCheckpoint RDDs
-    # (pretrain survivor-ids, iterative-loop rounds) which are NOT pins and
-    # are never FIFO-evicted — so the JVM-side bound must be on GROWTH over
-    # this baseline, not an absolute cap (full-suite r7: one checkpoint RDD
-    # from an earlier test file pushed the absolute count to PIN_MAX + 1).
-    start_jvm = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    for i in range(caching.PIN_MAX + 8):
-        # DISTINCT plan per iteration (ADVICE r6): identical re-pins
-        # dedupe onto one slot and would never approach the cap — the
-        # varying limit keeps every iteration a genuinely new pin so
-        # FIFO eviction is actually exercised here.
-        sigs = minhash_signatures_arr(docs.limit(40 + i), num_hashes=8)
-        idx = lsh_banded_index(sigs, bands=2, rows=4)
-        idx.count()  # materialize so the pin actually holds blocks
-    assert len(caching._pins) <= caching.PIN_MAX
-    # the JVM agrees: the loop's PIN_MAX + 8 pins grew the block manager
-    # by at most PIN_MAX entries (FIFO eviction unpersisted the excess)
-    jvm_live = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    assert jvm_live - start_jvm <= caching.PIN_MAX, (
-        f"{jvm_live} RDDs pinned after {caching.PIN_MAX + 8} pins from a "
-        f"baseline of {start_jvm} (cap {caching.PIN_MAX}) — eviction is not "
-        "unpersisting JVM-side"
+    base = json.load(open(os.path.join(REPO, "PLAN_SIGNATURES.json")))
+    qs = get_queries()
+    qs[leaker](spark, base["sf_dir"])
+    sig = plan_signature(formatted_plan(qs[target](spark, base["sf_dir"])))
+    assert sig == base["signatures"][target], (
+        f"{target} built after {leaker} plans {sig}, not its committed "
+        f"{base['signatures'][target]}: a pin of {leaker} outlived its build"
     )
 
 
-def test_identical_plan_repin_refreshes_slot_not_appends(spark, sf_dir):
-    """Pin dedupe by plan semantics (VERDICT r5 item 3): re-invoking a
-    query rebuilds a logically identical frame whose ``.cache()`` maps to
-    the EXISTING CacheManager entry — appending a second FIFO slot for it
-    double-counts the entry, and evicting the OLDER slot unpersists data
-    the newer slot still counts on. A semantically identical re-pin must
-    refresh the existing slot and return the already-pinned frame."""
-    from wordcount_spark.operators import caching
-    from wordcount_spark.sources.readers import load_table
+def test_next_build_releases_pins(spark, sf_dir):
+    """Sharing inside a query stays (ffill scans its pinned hourly
+    aggregate), and the next registry build unpersists that pin.
+    getPersistentRDDs also counts localCheckpoint RDDs, which are not
+    pins, so the bound is on growth over a baseline."""
+    from wordcount_spark.operators.caching import release_pins
+    from wordcount_spark.plans.explain import formatted_plan
+    from wordcount_spark.registry import get_queries
 
-    def build():  # rebuilt lineage each call — new expr ids, same semantics
-        return load_table(spark, sf_dir, "documents").select("doc_id").limit(7)
-
-    # drain pins carried over from other test files (ADVICE r6: the spark
-    # fixture is session-scoped, so _pins can arrive AT the cap here —
-    # an insert then evicts the oldest and keeps the length constant,
-    # making length-delta asserts ordering-sensitive). Eviction is always
-    # safe by design, so clearing is a legal session state.
-    while caching._pins:
-        try:
-            caching._pins.popitem(last=False)[1].unpersist()
-        except Exception:
-            pass
-    first = caching.bounded_cache(build())
-    first.count()  # materialize so the CacheManager entry is live
-    n_slots = len(caching._pins)
-    for _ in range(4):
-        again = caching.bounded_cache(build())
-    assert len(caching._pins) == n_slots, "identical re-pins must not append"
-    assert again is first, "re-pin must return the already-pinned frame"
-    # a genuinely different plan still gets its own slot
-    other = caching.bounded_cache(
-        load_table(spark, sf_dir, "documents").select("doc_id").limit(9)
+    qs = get_queries()
+    release_pins()
+    persistent = spark.sparkContext._jsc.sc().getPersistentRDDs
+    start = persistent().size()
+    ffill = qs["events_resample_ffill"](spark, sf_dir)
+    ffill.count()
+    assert "InMemoryTableScan" in formatted_plan(ffill)
+    assert persistent().size() > start, "ffill's pin holds no blocks"
+    qs["q1_pricing_summary"](spark, sf_dir)
+    assert persistent().size() == start, (
+        f"{persistent().size() - start} RDD(s) still pinned after the next build"
     )
-    assert other is not first
-    assert len(caching._pins) == n_slots + 1
-    assert any(p is other for p in caching._pins.values())
-
-
-def test_renamed_repin_returns_callers_column_names(spark, sf_dir):
-    """Plan canonicalization ignores output NAMES, so a frame and its
-    ``withColumnRenamed`` twin are semantically equal — the r10 regression:
-    events_gapfill_hourly pinned hourly-renamed-to-n_raw, then
-    events_rollup_multigrain's pin of the plain hourly aggregate got the
-    n_raw frame back and its select("n_events") failed analysis (the red
-    r10 suite). A semantic hit must come back with the CALLER'S column
-    names, still scanning the one shared cache entry (no new FIFO slot)."""
-    from wordcount_spark.operators import caching
-    from wordcount_spark.sources.readers import load_table
-
-    def base():
-        return (
-            load_table(spark, sf_dir, "documents")
-            .groupBy("source").count()
-        )
-
-    while caching._pins:
-        try:
-            caching._pins.popitem(last=False)[1].unpersist()
-        except Exception:
-            pass
-    renamed = caching.bounded_cache(base().withColumnRenamed("count", "n_docs"))
-    renamed.count()  # materialize the shared cache entry
-    n_slots = len(caching._pins)
-    plain = caching.bounded_cache(base())
-    assert plain.columns == ["source", "count"], (
-        f"semantic re-pin leaked the stored frame's names: {plain.columns}"
-    )
-    assert len(caching._pins) == n_slots, "rename re-pin must not add a slot"
-    # the relabel is a Project over the SAME cache entry, not a new pin
-    plan = plain._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan, "relabelled frame must still scan the cache"
-    plain.select("count").count()  # the caller's names actually resolve

@@ -7,11 +7,12 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
+from wordcount_spark.operators.caching import bounded_cache
 from wordcount_spark.registry import get_queries
 
 
 def test_gapfill_grid_is_dense(spark):
-    df = get_queries()["events_gapfill_hourly"](spark, SF_DIR).cache()
+    df = bounded_cache(get_queries()["events_gapfill_hourly"](spark, SF_DIR))
     hours = df.select("bucket_hour").distinct().count()
     types = df.select("event_type").distinct().count()
     assert df.count() == hours * types  # every cell present exactly once
@@ -19,11 +20,10 @@ def test_gapfill_grid_is_dense(spark):
     assert df.where("n_events = 0").count() > 0
     # and zero-filled cells carry a zero sum, not NULL
     assert df.where("n_events = 0 AND sum_value IS NULL").count() == 0
-    df.unpersist()
 
 
 def test_rollup_grains_conserve_totals(spark):
-    df = get_queries()["events_rollup_multigrain"](spark, SF_DIR).cache()
+    df = bounded_cache(get_queries()["events_rollup_multigrain"](spark, SF_DIR))
     # sum_value is a canonical DOUBLE output (driver hash rule); re-sum in
     # decimal so the conservation check is exact — each cell is a 2dp value
     # that round-trips double→decimal(18,2) losslessly
@@ -38,14 +38,13 @@ def test_rollup_grains_conserve_totals(spark):
     }
     assert by_grain["hour"][0] == by_grain["day"][0]  # same events counted
     assert by_grain["hour"][1] == by_grain["day"][1]  # same value mass
-    df.unpersist()
 
 
 def test_chunk_windows_cover_every_token(spark):
     from wordcount_spark.operators.queries_llmprep import CHUNK_S, CHUNK_W
 
     qs = get_queries()
-    chunks = qs["text_chunk_windows"](spark, SF_DIR).cache()
+    chunks = bounded_cache(qs["text_chunk_windows"](spark, SF_DIR))
     # stride steps: consecutive chunk starts differ by exactly CHUNK_S
     bad_stride = chunks.where(F.col("start_tok") != F.col("chunk_idx") * CHUNK_S)
     assert bad_stride.count() == 0
@@ -71,13 +70,12 @@ def test_chunk_windows_cover_every_token(spark):
     assert chunks.where(
         (F.col("n_tokens_chunk") <= 0) | (F.col("n_tokens_chunk") > CHUNK_W)
     ).count() == 0
-    chunks.unpersist()
 
 
 def test_ffill_carries_last_observation(spark):
     from pyspark.sql import Window
 
-    df = get_queries()["events_resample_ffill"](spark, SF_DIR).cache()
+    df = bounded_cache(get_queries()["events_resample_ffill"](spark, SF_DIR))
     w = (
         Window.partitionBy("event_type")
         .orderBy("bucket_hour")
@@ -93,7 +91,6 @@ def test_ffill_carries_last_observation(spark):
     assert bad.count() == 0
     # gaps exist at this SF, and some are filled (not all leading)
     assert df.where("was_gap AND filled_value IS NOT NULL").count() > 0
-    df.unpersist()
 
 
 def test_sessionize_gap_boundaries(spark):
@@ -238,7 +235,7 @@ def test_pack_sequences_invariants(spark):
     (c) fragments tile each sequence with no gaps or overlaps."""
     from wordcount_spark.operators.queries_llmprep import PACK_C, _toks
 
-    frags = get_queries()["llm_pack_sequences"](spark, SF_DIR).cache()
+    frags = bounded_cache(get_queries()["llm_pack_sequences"](spark, SF_DIR))
 
     from wordcount_spark.sources.readers import load_table
 

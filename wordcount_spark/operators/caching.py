@@ -1,81 +1,47 @@
-"""Session-wide bounded cache pinning.
+"""Query-scoped cache pinning.
 
 Query functions cache shared sub-frames (a tokenized corpus consumed by
 two branches, an O(groups) count table read twice) because Spark does not
 reuse exchanges across DataFrame branches. Each ``.cache()`` pins blocks
 in the block manager until explicitly unpersisted — and query functions
 return lazy frames, so they cannot unpersist after the consuming job.
-Long sessions that invoke many queries (stability_check runs every
-registered query twice; the driver sim runs all of them) would accumulate
-pins without bound (ADVICE r3 flagged the LSH instance; this closes the
-class).
 
-``bounded_cache`` keeps a global FIFO of live pins capped at
-:data:`PIN_MAX`; inserting past the cap unpersists the oldest pin.
-Evicting is ALWAYS safe: an evicted frame that is re-executed later just
-recomputes its lineage (correctness is unaffected — only the reuse
-speed-up is lost, and only for a frame at least PIN_MAX queries old).
+``bounded_cache`` records every pin; :func:`release_pins` unpersists them
+all. ``registry.get_queries()`` calls it before each build, so a pin lives
+exactly as long as the query that made it. The contract every caller
+keeps is build → action → next build: sharing inside one query is
+unchanged, and a frame executed after the next build just recomputes its
+lineage (correctness is unaffected — only the reuse is lost).
 
-Pins are DEDUPED on the plan's semantics (VERDICT r5 item 3): re-invoking
-a query rebuilds a logically identical frame, and Spark's CacheManager
-maps its ``.cache()`` onto the EXISTING cache entry ("Asked to cache
-already cached data") — so appending a second FIFO slot would double-count
-one entry, and evicting the older slot would unpersist data the newer slot
-still counts on. A re-pin of a semantically identical frame (same session)
-instead refreshes the existing slot's FIFO position and returns the
-already-pinned frame, so FIFO slots and CacheManager entries stay 1:1.
+Scoping is also what keeps plans independent of session order. Spark's
+CacheManager substitutes any live pin into ANY later plan that matches it
+semantically, so a pin that outlived its query rewrote unrelated queries
+(dropped pushdowns, moved shuffles, leaked column names). With no pin
+surviving into the next build there is nothing to substitute and nothing
+to deduplicate: two pins of one plan inside one query map to the same
+CacheManager entry, and unpersisting it twice is harmless.
 """
 
 from __future__ import annotations
 
-from collections import OrderedDict
-
 from pyspark.sql import DataFrame
 
-#: max frames pinned at once, session-wide. Individual queries pin ≤ 5
-#: frames, so 32 slots keep every frame of the last ~6+ queries warm
-#: while bounding block-manager growth over registry-wide sweeps.
-PIN_MAX = 32
-
-#: (session identity, plan semanticHash) -> pinned frame, insertion-ordered.
-#: semanticHash is 32-bit, so a hit is CONFIRMED with ``sameSemantics``
-#: before reuse (a collision falls through to an identity-keyed slot).
-_pins: OrderedDict[tuple, DataFrame] = OrderedDict()
+#: frames pinned since the last :func:`release_pins`
+_pins: list[DataFrame] = []
 
 
 def bounded_cache(df: DataFrame) -> DataFrame:
-    """``df.cache()`` with session-wide bounded pinning (oldest evicted;
-    a semantically identical re-pin refreshes its slot, never doubles it)."""
-    try:
-        key = (id(df.sparkSession), df.semanticHash())
-    except Exception:  # session mid-shutdown / analysis unavailable
-        key = None
-    if key is not None and key in _pins:
-        stored = _pins[key]
-        try:
-            same = df.sameSemantics(stored)
-        except Exception:
-            same = False
-        if same:
-            _pins.move_to_end(key)  # refresh, don't double-pin
-            if stored.columns == df.columns:
-                return stored
-            # Plan canonicalization ignores output NAMES (a pure
-            # withColumnRenamed is semantics-preserving), so a hit may
-            # carry different column names than the frame the caller
-            # built (r10: gapfill pinned hourly-as-n_raw, then the
-            # multigrain rollup got n_raw back and its select(n_events)
-            # failed analysis). Re-label on top of the pinned frame: the
-            # Project scans the SAME cache entry, FIFO stays 1:1.
-            return stored.toDF(*df.columns)
-        key = (key, id(df))  # 32-bit semanticHash collision: distinct slot
+    """``df.cache()``, released before the next registry build."""
     df = df.cache()
-    if key is None:
-        key = ("anon", id(df))
-    _pins[key] = df
-    while len(_pins) > PIN_MAX:
+    _pins.append(df)
+    return df
+
+
+def release_pins() -> None:
+    """Unpersist every pin made since the last release."""
+    for df in _pins:
         try:
-            _pins.popitem(last=False)[1].unpersist()
+            df.unpersist()
         except Exception:
             pass  # session already stopped / frame already unpersisted
-    return df
+    _pins.clear()

@@ -198,8 +198,8 @@ def lsh_banded_index(
     """(id, band, bucket) banded index rows, CACHED — this is the frame a
     production LSH pipeline materializes as its standing index table.
     hash_mode='md5' buckets by md5 of the joined slice (portable to the
-    SQL oracle); 'xxhash64' uses the cheap murmur hash. The pin is
-    bounded session-wide by operators/caching.py (oldest evicted)."""
+    SQL oracle); 'xxhash64' uses the cheap murmur hash. The pin lives
+    until the next registry build (operators/caching.py)."""
 
     def bucket_of(bnd: int) -> Column:
         sl = F.slice("signature", bnd * rows + 1, rows)

@@ -9,9 +9,12 @@ name before value-hashing.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from wordcount_spark.operators.caching import release_pins
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -201,6 +204,16 @@ EVIDENCE_RESET: dict[str, int] = {
     # (orderkey, suppkey) aggregate instead of a join-back of the
     # late-line fact (2 fact scans -> 1, one fewer exchange; same oracle)
     "q21_waiting_suppliers": 10,
+    # r12: cache pins are released before each registry build. The r9
+    # signature freeze (like every registry sweep) built these after a
+    # query whose live pin Spark substituted into their plans
+    # (dedup_ngram_jaccard's shingles, the triangle count's adjacency,
+    # dedup_minhash_lsh's LSH pins, mix_rebalance_to_min's lang counts);
+    # the refreeze records the cold plans
+    "eval_minhash_jaccard_calibration": 12,
+    "graph_walks_deterministic": 12,
+    "eval_lsh_candidate_recall": 12,
+    "mix_temperature_weights": 12,
 }
 
 
@@ -231,9 +244,23 @@ def _ordered(d: dict) -> dict:
     return {n: d[n] for n in sorted(d, key=key)}
 
 
+def _scoped(fn: Callable[[SparkSession, str], DataFrame]):
+    """``fn`` that first releases the pins of the previous build, so no
+    pin outlives its query (see ``operators/caching.py``)."""
+
+    @functools.wraps(fn)
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        release_pins()
+        return fn(spark, sf_dir)
+
+    return build
+
+
 def get_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """The registry in rotation order, each callable query-scoped. Raw
+    ``QUERIES`` stays unwrapped for composition inside a build."""
     _load_all()
-    return _ordered(QUERIES)
+    return {name: _scoped(fn) for name, fn in _ordered(QUERIES).items()}
 
 
 def get_oracles() -> dict[str, str]:

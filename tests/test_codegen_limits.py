@@ -128,3 +128,26 @@ def test_loop_shaped_band_projection_compiles(spark):
     planes = [[rng.choice((1, -1)) for _ in range(64)] for _ in range(16)]
     rows = df.select(F.concat(*[dot_sign(p) for p in planes]).alias("sig")).collect()
     assert len(rows) == 8 and all(len(r.sig) == 16 for r in rows)
+
+
+#: the perfbench headline mix; ~120 distinct whole-stage classes per pass,
+#: past Spark's default codegen cache of 100 entries
+_WORKING_SET = ("q9_pseudo_profit", "events_gapfill_hourly", "pipeline_pretrain_full")
+
+
+def test_warm_pass_compiles_nothing(spark, sf_dir):
+    """The session's codegen cache holds a repeat pass's whole working set:
+    building and running the same queries again compiles no class."""
+    from wordcount_spark.plans.metrics import codegen_compiles
+    from wordcount_spark.registry import get_queries
+
+    queries = get_queries()
+
+    def one_pass():
+        for name in _WORKING_SET:
+            queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    one_pass()
+    before = codegen_compiles(spark)
+    one_pass()
+    assert codegen_compiles(spark) - before == 0

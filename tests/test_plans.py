@@ -92,7 +92,10 @@ def test_metrics_side_channel(spark, sf_dir):
     from wordcount_spark.plans.metrics import run_with_metrics
 
     m = run_with_metrics(word_count(spark, sf_dir), "wordcount")
-    assert m["rows"] > 0 and m["wall_s"] > 0
+    assert set(m) == {"label", "wall_s", "rows", "codegen_compiles", "jobs"}
+    assert m["rows"] > 0 and m["wall_s"] > 0 and m["jobs"] > 0
+    # the same plan again hits the codegen cache: nothing recompiles
+    assert run_with_metrics(word_count(spark, sf_dir), "wordcount")["codegen_compiles"] == 0
 
 
 def test_runtime_bloom_filter_prunes_fact_scan(spark, sf_dir):

@@ -10,6 +10,7 @@ splits to executors natively, so there is nothing to hand-build.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructField, StructType, TimestampNTZType, TimestampType
 
 #: All driver-generated tables (TESTDATA.md). One parquet file per table.
 TABLES = (
@@ -26,8 +27,48 @@ TABLES = (
 )
 
 
+def _footer_schema(path: str) -> StructType:
+    """The schema Spark would infer for one parquet file, read from its
+    footer on the driver: every column nullable, TIMESTAMP(NANOS) as a
+    long (``nanosAsLong``), INT96 as TIMESTAMP, the rest as pyarrow maps
+    them (µs/ms timestamps not adjusted to UTC as TIMESTAMP_NTZ). Raises
+    on a type with no Spark mapping."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    timestamps = {}
+    with pq.ParquetFile(path) as pf:
+        for i in range(pf.metadata.num_columns):
+            col = pf.schema.column(i)
+            if col.physical_type == "INT96":
+                timestamps[col.path] = TimestampType()
+            elif json.loads(col.logical_type.to_json()).get("timeUnit") == "nanoseconds":
+                timestamps[col.path] = LongType()
+            else:
+                continue
+            if "." in col.path:
+                raise TypeError(f"{path}: nested timestamp {col.path} has no mapping")
+        arrow = pf.schema_arrow
+    return StructType(
+        [
+            StructField(
+                f.name,
+                timestamps.get(f.name) or from_arrow_type(f.type, prefer_timestamp_ntz=True),
+            )
+            for f in arrow
+        ]
+    )
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar parquet scan — Catalyst pushes filters/projections into it.
+
+    The schema is read from the parquet footer on the driver
+    (``_footer_schema``: the schema Spark would infer, INT96 and ns rules
+    included), so building a query runs no schema-inference Spark job. A
+    type with no mapping raises; there is no fallback to inference.
 
     ``events.ts`` may be TIMESTAMP(NANOS) in the parquet footer, which Spark
     rejects by default (PARQUET_TYPE_ILLEGAL). In that case we read it as a
@@ -39,19 +80,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     pure re-tag of the same micros, and LTZ is what event-time watermarks
     require. Either path yields the identical TIMESTAMP column.
     """
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import LongType, TimestampNTZType
-
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(ts_type, TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    path = f"{sf_dir}/{name}.parquet"
+    schema = _footer_schema(path)
+    df = spark.read.schema(schema).parquet(path)
+    if name != "events":
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    from pyspark.sql import functions as F
+
+    ts_type = schema["ts"].dataType
+    if isinstance(ts_type, LongType):
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif isinstance(ts_type, TimestampNTZType):
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -1,18 +1,21 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
 
-Timing = full query execution to a count-style action (materializes every
+Timing = build the query, then run it to a noop sink (materializes every
 row, avoids driver-side collect overhead dominating — the reference's own
 published numbers were 99.6% stdout I/O, a pathology we explicitly do not
-reproduce; see BASELINE.md).
+reproduce; see BASELINE.md): best-of-3 wall time per query, plus the
+executor CPU of the kept run (summed on the line as ``cpu_s``).
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import sys
 import time
+from functools import partial
 
 _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if _REPO_ROOT not in sys.path:
@@ -50,34 +53,29 @@ HEADLINE = [
 ]
 
 
-#: pre-run 1-min load above this marks the emitted JSON "noisy": the box
-#: is shared, and a busy neighbor inflates wall-clock up to ~2x. The
-#: comparison tool (tools/bench_compare.py) REFUSES noisy runs, so a
-#: round-over-round delta can never be a load artifact. 4.0 on a 32-cpu
-#: box (VERDICT r3: the old 12.0 gate accepted a pre-run load of 8.57
-#: that inflated every r3 query ~1.2-1.4x and poisoned the comparison).
+#: pre-run 1-min load above this marks the emitted JSON "noisy": a busy
+#: neighbor inflates wall-clock up to ~2x (VERDICT r3: a pre-run load of
+#: 8.57 inflated every r3 query ~1.2-1.4x). The flag is informational:
+#: nothing waits or retries on it.
 NOISE_LOAD_1M = 4.0
 
-#: how long main() waits for the 1-min load to drop below the gate
-#: before giving up and emitting a (marked-noisy) run anyway.
-QUIET_WAIT_SEC = 600
 
-
-def _wait_for_quiet(max_wait: float = QUIET_WAIT_SEC, poll: float = 15.0) -> float:
-    """Retry-until-quiet (VERDICT r3 item 1): block until the 1-minute
-    load average drops below NOISE_LOAD_1M, up to max_wait seconds.
-    Returns the final pre-run load; the caller still stamps "noisy" from
-    it, so a timeout degrades to the old behavior (emit, marked noisy)."""
-    load = os.getloadavg()[0]
-    deadline = time.monotonic() + max_wait
-    while load > NOISE_LOAD_1M and time.monotonic() < deadline:
-        print(
-            f"bench: load {load:.2f} > gate {NOISE_LOAD_1M}, waiting...",
-            file=sys.stderr,
-        )
-        time.sleep(poll)
-        load = os.getloadavg()[0]
-    return load
+def timed(build, n: int, status) -> tuple[float, float]:
+    """Run ``build()`` to a noop sink once to warm (JIT/codegen), then
+    ``n`` more times, rebuilding the DataFrame inside every timed region:
+    plan construction, file listing and any eager build-time jobs are
+    part of the measured work. Returns the
+    best wall time and the executor CPU seconds of that run, read from
+    ``status`` (a ``perfbench.probe.StatusReader``) around it."""
+    build().write.format("noop").mode("overwrite").save()
+    runs = []
+    for _ in range(n):
+        mark = status.mark()
+        t0 = time.monotonic()
+        build().write.format("noop").mode("overwrite").save()
+        wall = time.monotonic() - t0
+        runs.append((wall, status.stages_since(mark)["executor_cpu_s"]))
+    return min(runs, key=lambda r: r[0])
 
 
 def _materialize_8x_corpus(paths: list[str], scratch: str) -> list[str]:
@@ -149,8 +147,8 @@ def _materialize_8x_corpus(paths: list[str], scratch: str) -> list[str]:
 LINE_BUDGET = 1800
 
 #: sidecar (committed) holding the full diagnostic detail that round 4
-#: used to put on the stdout line: per-query load stamps, CPU
-#: calibration pair, stage breakdowns. Nothing is lost — it just no
+#: used to put on the stdout line: per-query executor CPU, corpus
+#: stage breakdowns. Nothing is lost — it just no
 #: longer competes with the headline line for the driver's tail buffer.
 DETAIL_SIDECAR = os.path.join(_REPO_ROOT, "BENCH_detail.json")
 
@@ -182,360 +180,136 @@ def _emit_final_line(out: dict, detail: dict) -> None:
     print(line)
 
 
-#: post-CORPUS-window 1-min load above which the try is not quiet. Unlike
-#: the pre-stamp (external load only — our JVM is idle when it is taken),
-#: a post-window stamp carries the corpus job's OWN threads, so the
-#: threshold must sit above the self-load contribution of a quiet window
-#: (ADVICE r8). None = not yet calibrated: the probe-drift gate below
-#: still covers the post-window, and quiet-window post-stamps accumulate
-#: in BENCH_detail/BENCH_floor artifacts until a separating value exists.
-CORPUS_POST_LOAD_NOISY: float | None = None
-
-#: post/pre CPU-calibration ratio above which the run is marked noisy:
-#: the pre-run load gate only sees neighbors present BEFORE the run; a
-#: neighbor arriving mid-run (observed r4: load 0.3 → 11 during one run,
-#: inflating queries ~1.1-1.7x) is caught by re-timing a fixed CPU-bound
-#: probe after the headline loop and comparing to its pre-loop time.
-CALIB_DRIFT_NOISY = 1.35
-
-
-def _probe_once(spark) -> float:
-    """One timed run of the fixed CPU-bound probe (200M xxhash64 max
-    across all cores, no I/O, no shuffle beyond the 1-row agg): a pure
-    contention thermometer, insensitive to page cache or data layout."""
+def _corpus_phase(spark, status, paths: list[str], out: dict, detail: dict) -> None:
+    """Apples-to-apples vs the reference's ONE compute-derived number: its
+    read+map stage ran at ~47.6 MB/s on 4 cores over raw_text_input
+    (BASELINE.md). Same input, same work (tokenize+normalize+count)."""
     from pyspark.sql import functions as F
 
-    t0 = time.monotonic()
-    # max, not sum: an ANSI-mode BIGINT sum of 2e8 full-range hashes
-    # overflows; max still evaluates every hash
-    spark.range(200_000_000).agg(F.max(F.xxhash64("id"))).collect()
-    return time.monotonic() - t0
+    from wordcount_spark.operators.wordcount import words_from_text
+    from wordcount_spark.sources.readers import load_text_corpus
 
+    nbytes = sum(os.path.getsize(p) for p in paths)
+    # Micro-benchmark confs (restored after): text is line-splittable,
+    # so size scan splits ~ total/parallelism — the default 128 MB
+    # leaves the 3.3 MB largest file as ONE task that serializes the
+    # normalize stage. AQE off + few reducers: on a sub-second job AQE's
+    # per-stage re-optimization is pure latency and the word vocabulary
+    # needs no 32-way reduce; both stay ON for the sf-scale headline
+    # queries, where they earn their keep.
+    saved = {
+        k: spark.conf.get(k)
+        for k in (
+            "spark.sql.files.maxPartitionBytes",
+            "spark.sql.adaptive.enabled",
+            "spark.sql.shuffle.partitions",
+        )
+    }
 
-def _cpu_calibration(spark, n: int = 3) -> float:
-    """Best-of-n wall time of the fixed probe."""
-    _probe_once(spark)  # warm: JIT/codegen
-    return min(_probe_once(spark) for _ in range(n))
+    def split_for(total: int) -> str:
+        per_core = total // max(spark.sparkContext.defaultParallelism, 1)
+        return str(min(max(per_core, 256 * 1024), 128 * 1024 * 1024))
+
+    spark.conf.set("spark.sql.files.maxPartitionBytes", split_for(nbytes))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        # Same WORK as the reference's read+map stage: tokenize, then
+        # normalize EVERY token, then count — the single-aggregation
+        # formulation (the reference's process_word also runs per
+        # token, not per distinct word). The flagship `wordcount`
+        # query instead uses vocabulary pre-aggregation — normalize
+        # O(vocab) — which wins at corpus scale but pays a second
+        # exchange that dominates on a 15 MB input.
+        def wc_df(path_list):
+            return (
+                words_from_text(
+                    load_text_corpus(spark, path_list), "text", mode="head"
+                )
+                .groupBy("word")
+                .agg(F.count("*").alias("cnt"))
+            )
+
+        # a 0.4 s job: best-of-8 is cheap at this size
+        best, _ = timed(lambda: wc_df(paths), 8, status)
+        out["reference_corpus_mb_per_sec"] = round(nbytes / 1e6 / best, 2)
+        # Committed stage breakdown (VERDICT r1 task 5): how much of
+        # the single-stream time is fixed per-job cost that vanishes
+        # at scale vs. actual tokenize/normalize/count compute.
+        empty, _ = timed(lambda: spark.range(1), 2, status)
+        scan, _ = timed(lambda: spark.read.text(paths), 2, status)
+        detail["reference_corpus_breakdown_sec"] = {
+            "total": round(best, 4),
+            "empty_job_floor": round(empty, 4),
+            "scan_only": round(scan, 4),
+        }
+        # same pipeline at 8x the corpus: the amortization point where
+        # per-job fixed costs stop dominating. The 8x input is DISTINCT
+        # bytes (original + 7 Caesar-rotated variants, disjoint
+        # vocabularies), so scan, shuffle AND aggregate state all scale
+        # with the input (VERDICT r2 item 5).
+        paths8 = _materialize_8x_corpus(
+            paths, os.path.join(_REPO_ROOT, ".bench_scratch", "corpus8x")
+        )
+        nbytes8 = sum(os.path.getsize(p) for p in paths8)
+        spark.conf.set("spark.sql.files.maxPartitionBytes", split_for(nbytes8))
+        best8, _ = timed(lambda: wc_df(paths8), 4, status)
+        out["reference_corpus_8x_mb_per_sec"] = round(nbytes8 / 1e6 / best8, 2)
+        detail["reference_corpus_8x_distinct_bytes"] = nbytes8
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-    prerun_load = _wait_for_quiet()
+    # EXTERNAL load, sampled before our JVM spins up
+    prerun_load = os.getloadavg()[0]
 
+    from perfbench.probe import StatusReader
     from wordcount_spark.registry import get_queries
     from wordcount_spark.session import get_spark
 
     spark = get_spark("wordcount_spark_bench", cpus=cpus)
+    status = StatusReader(spark)
     queries = get_queries()
 
-    def headline_pass():
-        pre = _cpu_calibration(spark)
-        timings: dict[str, float] = {}
-        query_load: dict[str, float] = {}
-        for name in HEADLINE:
-            if name not in queries:
-                continue
-            query_load[name] = round(os.getloadavg()[0], 2)
-            df = queries[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()  # warm: JIT/codegen
-            best = float("inf")
-            # best-of-3: this box's EXTERNAL load swings 0.7→11 within
-            # minutes (measured round 3) and inflates identical runs ~10%;
-            # the floor of three samples is markedly more stable than of two
-            for _ in range(3):
-                t0 = time.monotonic()
-                df.write.format("noop").mode("overwrite").save()
-                best = min(best, time.monotonic() - t0)
-            timings[name] = round(best, 4)
-        post = _cpu_calibration(spark)
-        return timings, query_load, pre, post
+    # best-of-3 wall; the kept run's executor CPU sits next to it
+    timings: dict[str, float] = {}
+    cpu: dict[str, float] = {}
+    for name in HEADLINE:
+        if name not in queries:
+            continue
+        wall, cpu_s = timed(partial(queries[name], spark, sf_dir), 3, status)
+        timings[name] = round(wall, 4)
+        cpu[name] = round(cpu_s, 4)
 
-    # retry-on-drift: this host's hypervisor steals CPU episodically
-    # (nonzero cumulative %steal; loadavg never sees it), so a single pass
-    # can straddle a steal window even after the pre-run load gate. The
-    # QUIETEST pass (lowest calibration drift) becomes the official line
-    # (VERDICT r5 item 5 — the r5 artifact emitted the last pass even
-    # though an earlier one was calmer); every pass is kept in the
-    # sidecar. If no pass is calm the emission is marked noisy and
-    # bench_compare refuses it. Three attempts, not two: r7's official
-    # line went out noisy after both of its passes straddled distinct
-    # steal windows ~2 minutes apart — a third try costs ~2 min and is
-    # cheap insurance against exactly that cadence. A pass also retries
-    # when any PER-QUERY load stamp exceeded the gate (r8: a neighbor
-    # that arrives after the pre-run gate and leaves before the post-run
-    # probe inflated a pass to 18.99 s that BOTH run-level gates called
-    # quiet; the per-query stamps read 5–9 throughout — calibration in
-    # tools/bench_floor.py: calm passes stamp 1.2–2.1, burst-straddling
-    # passes 5+, so the stamps see exactly the bursts the probes miss).
-    attempts: list[dict] = []
-    for _attempt in range(3):
-        timings, query_load, calib_pre, calib_post = headline_pass()
-        drift = max(calib_pre, calib_post) / max(min(calib_pre, calib_post), 1e-9)
-        max_load = max(query_load.values()) if query_load else 0.0
-        attempts.append({
-            "queries": timings,
-            "query_load_1m": query_load,
-            "max_query_load_1m": round(max_load, 2),
-            "cpu_calib_pre_sec": round(calib_pre, 4),
-            "cpu_calib_post_sec": round(calib_post, 4),
-            "calib_drift": round(drift, 3),
-        })
-        if drift <= CALIB_DRIFT_NOISY and max_load <= NOISE_LOAD_1M:
-            break
-        print(
-            f"bench: calib drift {drift:.2f} ({calib_pre:.3f}s -> "
-            f"{calib_post:.3f}s), max per-query load {max_load:.2f}, "
-            "retrying headline pass",
-            file=sys.stderr,
-        )
-    best_attempt = min(
-        attempts,
-        key=lambda a: (
-            a["max_query_load_1m"] > NOISE_LOAD_1M,  # prefer burst-free passes
-            a["calib_drift"],
-        ),
-    )
-    timings = best_attempt["queries"]
-    query_load = best_attempt["query_load_1m"]
-    calib_pre = best_attempt["cpu_calib_pre_sec"]
-    calib_post = best_attempt["cpu_calib_post_sec"]
-
-    total = round(sum(timings.values()), 4)
     out = {
         "metric": "headline_queries_total",
-        "value": total,
+        "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        "cpu_s": round(sum(cpu.values()), 4),
         "host_load_avg_1m_prerun": round(prerun_load, 2),
-        # component validity flags: the HEADLINE flag covers the per-query
-        # timings, the CORPUS flag (set below) covers the MB/s pair. They
-        # stay separate because their consumers differ — tools/bench_floor
-        # gates per-query quiet samples on the headline flag and throughput
-        # samples on the corpus flag; a burst that hits only the corpus
-        # phase must not discard an entire run's clean per-query samples
-        # from the quiet floor (observed r9: OR-ing everything into one
-        # flag zeroed n_quiet across 5 runs whose headline passes differed)
-        "noisy_headline": (
-            prerun_load > NOISE_LOAD_1M
-            or best_attempt["max_query_load_1m"] > NOISE_LOAD_1M
-            or max(calib_pre, calib_post)
-            > CALIB_DRIFT_NOISY * min(calib_pre, calib_post)
-        ),
+        "noisy": prerun_load > NOISE_LOAD_1M,
     }
-    out["noisy"] = out["noisy_headline"]
     # Everything that is diagnostic-only goes to the SIDECAR, never the
     # stdout line: the driver captures only the last ~2000 bytes of
-    # stdout and parses the final line as JSON, and in round 4 the line
-    # outgrew that window (BENCH_r04.json "parsed": null — the official
-    # perf artifact of the round was machine-unreadable). The sidecar is
-    # committed, so nothing is lost; the line stays compact by design
-    # and _emit_final_line enforces the budget mechanically.
-    detail = {
-        # contention context: this box is shared — external load inflates
-        # wall-clock up to ~2x (measured). prerun load is the EXTERNAL
-        # load (sampled before our JVM spins up); per-query loads include
-        # our own threads and bound how contended each timing was.
-        "host_load_avg_1m": round(os.getloadavg()[0], 2),
-        "query_load_1m": query_load,
-        # fixed CPU probe timed before/after the headline loop: drift
-        # means a neighbor arrived mid-run, which the pre-run load gate
-        # cannot see. Bidirectional: post >> pre means a neighbor ARRIVED
-        # mid-run; pre >> post means the box was still winding down when
-        # the run started — either way the per-query timings were taken
-        # under CHANGING conditions and can't be compared round-over-round.
-        "cpu_calib_pre_sec": round(calib_pre, 4),
-        "cpu_calib_post_sec": round(calib_post, 4),
-        # every headline pass, including drift-discarded ones — the
-        # official line above is the quietest of these
-        "headline_attempts": attempts,
-    }
+    # stdout and parses the final line as JSON (round 4's line outgrew
+    # that window: BENCH_r04.json "parsed": null).
+    detail = {"executor_cpu_s": cpu}
 
-    # Apples-to-apples vs the reference's ONE compute-derived number: its
-    # read+map stage ran at ~47.6 MB/s on 4 cores over raw_text_input
-    # (BASELINE.md). Same input, same work (tokenize+normalize+count).
     corpus = os.environ.get("SPARK_GRAFT_CORPUS", "/root/reference/raw_text_input")
-    import glob as _glob
-
-    if os.path.isdir(corpus) and _glob.glob(os.path.join(corpus, "*")):
-        from pyspark.sql import functions as F
-
-        from wordcount_spark.operators.wordcount import words_from_text
-        from wordcount_spark.sources.readers import load_text_corpus
-
-        paths = sorted(_glob.glob(os.path.join(corpus, "*")))
-        nbytes = sum(os.path.getsize(p) for p in paths)
-        # Micro-benchmark confs (restored after): text is line-splittable,
-        # so size scan splits ~ total/parallelism — the default 128 MB
-        # leaves the 3.3 MB largest file as ONE task that serializes the
-        # normalize stage. AQE off + few reducers: on a sub-second job AQE's
-        # per-stage re-optimization is pure latency and the word vocabulary
-        # needs no 32-way reduce; both stay ON for the sf-scale queries
-        # above, where they earn their keep.
-        saved = {
-            k: spark.conf.get(k)
-            for k in (
-                "spark.sql.files.maxPartitionBytes",
-                "spark.sql.adaptive.enabled",
-                "spark.sql.shuffle.partitions",
-            )
-        }
-        split = min(max(nbytes // max(spark.sparkContext.defaultParallelism, 1),
-                        256 * 1024), 128 * 1024 * 1024)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            # Same WORK as the reference's read+map stage: tokenize, then
-            # normalize EVERY token, then count — the single-aggregation
-            # formulation (the reference's process_word also runs per
-            # token, not per distinct word). The flagship `wordcount`
-            # query instead uses vocabulary pre-aggregation — normalize
-            # O(vocab) — which wins at corpus scale but pays a second
-            # exchange that dominates on a 15 MB input.
-            def wc_df(path_list):
-                return (
-                    words_from_text(
-                        load_text_corpus(spark, path_list), "text", mode="head"
-                    )
-                    .groupBy("word")
-                    .agg(F.count("*").alias("cnt"))
-                )
-
-            # rebuild the DataFrame inside every timed run (CLAUDE.md
-            # benchmark rule: plan construction and file listing are part
-            # of the measured job)
-            def timed(df_fn, n=4):
-                df_fn().write.format("noop").mode("overwrite").save()  # warm
-                best = float("inf")
-                for _ in range(n):  # best-of-n: the floor is the signal,
-                    # the rest is scheduler/GC noise on a shared box
-                    t0 = time.monotonic()
-                    df_fn().write.format("noop").mode("overwrite").save()
-                    best = min(best, time.monotonic() - t0)
-                return best
-
-            # a 0.4 s job under external load is noise-dominated: best-of-8
-            # (cheap at this size) + the phase's own load stamp, so the
-            # judged vs-baseline ratio can be read against contention.
-            # The phase RETRIES (up to 3x) while its load stamp exceeds
-            # the gate — throughput is the one headline metric where a
-            # burst-crushed sample (observed 9–26 MB/s vs ~39 calm) would
-            # otherwise ride a quiet-flagged line straight into the
-            # vs-baseline comparison.
-            #
-            # POST-window gates (VERDICT r10 item 2; r9 advice item 3): the
-            # pre-stamp cannot see a neighbor that arrives MID-window —
-            # r10's 8x sample was crushed 13x (4.07 MB/s vs the 52.6 floor)
-            # yet shipped noisy_corpus=false. Two detectors with
-            # complementary blind spots now gate each try:
-            #  - probe drift: one timed run of the fixed CPU probe right
-            #    after the window, against the headline loop's quietest
-            #    calibration this run. Contention still present inflates
-            #    it; self-load cannot (our job has finished), so no
-            #    self-load threshold problem. Blind spot: a neighbor gone
-            #    by window end.
-            #  - post load stamp: the 1-min average decays slowly, so it
-            #    still carries a neighbor that already left — but it also
-            #    carries our OWN window's threads (ADVICE r8), so it gates
-            #    at CORPUS_POST_LOAD_NOISY, calibrated from quiet-window
-            #    samples (accumulating in the floor artifacts), not at the
-            #    external gate.
-            post_stamps: dict[str, float] = {}
-            post_probes: dict[str, float] = {}
-            detail["reference_corpus_post_load_1m"] = post_stamps
-            detail["reference_corpus_post_probe_sec"] = post_probes
-            calib_floor = min(
-                min(a["cpu_calib_pre_sec"], a["cpu_calib_post_sec"])
-                for a in attempts
-            )
-            detail["corpus_probe_baseline_sec"] = round(calib_floor, 4)
-
-            def timed_stamped(df_fn, n, tag):
-                tries = []
-                for attempt in range(3):
-                    if attempt:
-                        # let the lagging 1-min average decay before
-                        # re-stamping — back-to-back retries read the SAME
-                        # loud value during the multi-minute bursts this box
-                        # actually sees, making the retry a no-op (ADVICE r8)
-                        _wait_for_quiet(max_wait=120)
-                    stamp = round(os.getloadavg()[0], 2)
-                    t = timed(df_fn, n=n)
-                    probe = _probe_once(spark)
-                    post = round(os.getloadavg()[0], 2)
-                    post_stamps[f"{tag}_try{attempt}"] = post
-                    post_probes[f"{tag}_try{attempt}"] = round(probe, 4)
-                    quiet_try = (
-                        stamp <= NOISE_LOAD_1M
-                        and probe <= CALIB_DRIFT_NOISY * calib_floor
-                        and (
-                            CORPUS_POST_LOAD_NOISY is None
-                            or post <= CORPUS_POST_LOAD_NOISY
-                        )
-                    )
-                    tries.append((quiet_try, stamp, t))
-                    if quiet_try:
-                        break
-                quiet = [(s, t) for q, s, t in tries if q]
-                if quiet:
-                    s, t = min(quiet, key=lambda st: st[1])
-                    return s, t, False
-                _, s, t = min(tries, key=lambda qst: qst[2])
-                return s, t, True
-
-            stamp, best, noisy_c = timed_stamped(
-                lambda: wc_df(paths), n=8, tag="corpus"
-            )
-            detail["reference_corpus_load_1m"] = stamp
-            out["reference_corpus_mb_per_sec"] = round(nbytes / 1e6 / best, 2)
-            # Committed stage breakdown (VERDICT r1 task 5): how much of
-            # the single-stream time is fixed per-job cost that vanishes
-            # at scale vs. actual tokenize/normalize/count compute.
-            empty = timed(lambda: spark.range(1), n=2)
-            scan = timed(lambda: spark.read.text(paths), n=2)
-            detail["reference_corpus_breakdown_sec"] = {
-                "total": round(best, 4),
-                "empty_job_floor": round(empty, 4),
-                "scan_only": round(scan, 4),
-            }
-            # same pipeline at 8x the corpus: the amortization point where
-            # per-job fixed costs stop dominating. The 8x input is DISTINCT
-            # bytes (original + 7 Caesar-rotated variants, disjoint
-            # vocabularies), so scan, shuffle AND aggregate state all scale
-            # with the input — honest by construction (VERDICT r2 item 5;
-            # the old duplicate-path-list caveat no longer applies).
-            paths8 = _materialize_8x_corpus(
-                paths, os.path.join(_REPO_ROOT, ".bench_scratch", "corpus8x")
-            )
-            nbytes8 = sum(os.path.getsize(p) for p in paths8)
-            split8 = min(
-                max(
-                    nbytes8 // max(spark.sparkContext.defaultParallelism, 1),
-                    256 * 1024,
-                ),
-                128 * 1024 * 1024,
-            )
-            spark.conf.set("spark.sql.files.maxPartitionBytes", str(split8))
-            stamp8, best8, noisy_c8 = timed_stamped(
-                lambda: wc_df(paths8), n=4, tag="corpus8x"
-            )
-            detail["reference_corpus_8x_load_1m"] = stamp8
-            out["reference_corpus_8x_mb_per_sec"] = round(nbytes8 / 1e6 / best8, 2)
-            detail["reference_corpus_8x_distinct_bytes"] = nbytes8
-            # the corpus phase runs AFTER the headline gates computed their
-            # flag; if every timed_stamped retry stayed loud (pre-stamp OR
-            # either post-window gate), the surviving MB/s may be
-            # burst-deflated and must not ride a quiet-flagged line into
-            # the vs-baseline comparison (ADVICE r8 medium; VERDICT r10
-            # item 2 promoted the post-window detectors to gates)
-            out["noisy_corpus"] = bool(noisy_c or noisy_c8)
-            out["noisy"] = bool(out["noisy"] or out["noisy_corpus"])
-        finally:
-            for k, v in saved.items():
-                spark.conf.set(k, v)
+    paths = sorted(glob.glob(os.path.join(corpus, "*")))
+    if paths:
+        _corpus_phase(spark, status, paths, out, detail)
+    else:
+        print(f"bench: reference corpus absent at {corpus}; "
+              "no MB/s figures", file=sys.stderr)
+        detail["reference_corpus"] = f"absent: {corpus}"
 
     _emit_final_line(out, detail)
     spark.stop()

@@ -25,33 +25,6 @@ BASE_ROWS = 5_000
 PARTITIONS = 32
 
 
-def code_fingerprint() -> str:
-    """16-hex-char sha256 over this file plus every wordcount_spark/*.py —
-    the staleness scope for the quietest-wins merge (ADVICE r9 medium:
-    pipeline entries carried no round/fingerprint, so a quiet measurement
-    taken BEFORE a code/plan change was kept over every later sweep
-    indefinitely, silently reporting pre-change growth ratios as current).
-    Any package or harness edit changes the fingerprint; mismatched
-    entries always lose the merge (fall back to overwrite), so a calm
-    pre-change sweep can never mask a post-change scaling regression.
-    Deliberately coarse — invalidating quiet history on an unrelated edit
-    costs only a re-run, while a per-pipeline scope that missed a shared
-    operator change would keep exactly the stale entry that matters."""
-    import hashlib
-
-    h = hashlib.sha256()
-    paths = [os.path.abspath(__file__)]
-    for root, _dirs, files in os.walk(os.path.join(_REPO_ROOT, "wordcount_spark")):
-        for f in files:
-            if f.endswith(".py"):
-                paths.append(os.path.join(root, f))
-    for p in sorted(paths):
-        h.update(os.path.relpath(p, _REPO_ROOT).encode())
-        with open(p, "rb") as fh:
-            h.update(fh.read())
-    return h.hexdigest()[:16]
-
-
 def synth(spark, n_rows: int):
     """(doc_id, text, lang, source, n_chars) rows generated in-executor."""
     return (
@@ -440,32 +413,6 @@ def pipelines():
     }
 
 
-def merge_sweep(prior: dict, results: dict, fp: str) -> dict:
-    """Quietest-wins merge of a fresh full sweep against the committed
-    pipelines, scoped to one code fingerprint: a prior entry survives only
-    if it carries the CURRENT fingerprint and is quieter (noisy flag, then
-    max kept-sample load). Pure so the staleness scoping is pinned by
-    tests/test_scale_check_merge.py without a Spark session."""
-
-    def quietness(rec: dict) -> tuple:
-        loads = rec.get("load_1m_per_measurement")
-        if loads is None:
-            return (True, float("inf"))
-        return (bool(rec.get("noisy")), max(loads.values()))
-
-    merged = {}
-    for name, rec in results.items():
-        old = prior.get(name)
-        merged[name] = (
-            old
-            if old is not None
-            and old.get("fingerprint") == fp
-            and quietness(old) < quietness(rec)
-            else rec
-        )
-    return merged
-
-
 def _shuffle_bytes_since(spark, prev_stage_max: int) -> tuple[int, int, int]:
     """(total shuffle-write bytes, peak per-stage bytes, new max stage id)
     over all COMPLETE stages with id > prev_stage_max, read from the UI
@@ -546,45 +493,27 @@ def main() -> None:
     if only:
         selected = {k: selected[k] for k in only}
 
-    from bench import NOISE_LOAD_1M, _wait_for_quiet
-
     results: dict[str, dict] = {}
-    fp = code_fingerprint()
     stage_max = -1
     for name, fn in selected.items():
         times = {}
         shuffles: dict[str, dict] = {}
-        meas_load: dict[str, float] = {}
-        meas_quiet: dict[str, int] = {}
-        # this box's external load swings 0.2 -> 15 within minutes
-        # (SCALE.md §11): gate each pipeline on the same wait-for-quiet
-        # the bench uses, and stamp the residual load so a spiked ratio
-        # is never mistaken for a plan regression
-        load = _wait_for_quiet(max_wait=300.0)
         for label, rows in (("1x", BASE_ROWS), (f"{mult}x", BASE_ROWS * mult)):
             fn(synth(spark, rows)).write.format("noop").mode(
                 "overwrite"
             ).save()  # warm: JIT/codegen
-            # per-MEASUREMENT load stamps (VERDICT r8 item 4): the
-            # run-level prerun stamp twice blamed plan regressions for
-            # what were bursts arriving mid-sweep — the bench solved this
-            # class with a stamp per sample. Each repetition carries its
-            # own stamp; the kept sample quiet-prefers, and the pipeline's
-            # noisy flag reflects the samples actually KEPT, not just the
-            # load before the pipeline started.
-            samples: list[tuple[float, float]] = []
+            best = float("inf")
             for _ in range(2):
                 # rebuild INSIDE the timed region: pipelines with eager
                 # build-time phases (pack's prefix-sum checkpoint+collect)
                 # must pay them in the measurement, not before it
                 if only:  # shuffle accounting: bytes of ONE clean run
                     _, _, stage_max = _shuffle_bytes_since(spark, stage_max)
-                stamp = round(os.getloadavg()[0], 2)
                 t0 = time.monotonic()
                 fn(synth(spark, rows)).write.format("noop").mode(
                     "overwrite"
                 ).save()
-                samples.append((stamp, time.monotonic() - t0))
+                best = min(best, time.monotonic() - t0)
                 if only:
                     tot, peak, stage_max = _shuffle_bytes_since(spark, stage_max)
                     # min across repetitions (ADVICE r5): clean runs write
@@ -597,19 +526,9 @@ def main() -> None:
                             "shuffle_write_bytes": tot,
                             "peak_stage_bytes": peak,
                         }
-            quiet = [s for s in samples if s[0] <= NOISE_LOAD_1M]
-            kept = min(quiet or samples, key=lambda st: st[1])
-            times[label] = round(kept[1], 3)
-            meas_load[label] = kept[0]
-            meas_quiet[label] = len(quiet)
+            times[label] = round(best, 3)
         ratio = round(times[f"{mult}x"] / times["1x"], 2)
-        results[name] = {**times, "growth_ratio": ratio, "data_ratio": mult,
-                         "prerun_load_1m": round(load, 2),
-                         "load_1m_per_measurement": meas_load,
-                         "n_quiet_per_measurement": meas_quiet,
-                         "fingerprint": fp,
-                         "noisy": (load > NOISE_LOAD_1M
-                                   or max(meas_load.values()) > NOISE_LOAD_1M)}
+        results[name] = {**times, "growth_ratio": ratio, "data_ratio": mult}
         if shuffles:
             sb1 = shuffles["1x"]["shuffle_write_bytes"]
             sbN = shuffles[f"{mult}x"]["shuffle_write_bytes"]
@@ -638,25 +557,8 @@ def main() -> None:
             doc = json.load(open(out))
         except (OSError, ValueError):
             doc = {}
-        # per-pipeline quietest-wins merge (r9, same philosophy as
-        # tools/bench_floor.py): on a box with hour-scale burst cycles a
-        # single sweep rarely lands all-quiet, so repeated invocations
-        # TIGHTEN the artifact instead of letting a stormy sweep
-        # overwrite a calm one. A prior entry is kept when it is quieter
-        # (noisy flag, then the max kept-sample load). Only merges when
-        # the prior sweep used the same base_rows/multiplier AND the same
-        # code fingerprint (ADVICE r9 medium: an unstamped merge kept a
-        # quiet PRE-change measurement over every later sweep forever,
-        # reporting stale growth ratios as current); stamp-less or
-        # mismatched-fingerprint entries always lose to current ones.
-        prior = (
-            doc.get("pipelines", {})
-            if doc.get("base_rows") == BASE_ROWS and doc.get("multiplier") == mult
-            else {}
-        )
-        merged = merge_sweep(prior, results, fp)
         doc.update(
-            {"base_rows": BASE_ROWS, "multiplier": mult, "pipelines": merged}
+            {"base_rows": BASE_ROWS, "multiplier": mult, "pipelines": results}
         )
         with open(out, "w") as f:
             json.dump(doc, f, indent=2)

@@ -60,12 +60,12 @@ HEADLINE = [
 NOISE_LOAD_1M = 4.0
 
 
-def timed(build, n: int, status) -> tuple[float, float]:
+def timed(build, n: int, status) -> tuple[float, dict]:
     """Run ``build()`` to a noop sink once to warm (JIT/codegen), then
     ``n`` more times, rebuilding the DataFrame inside every timed region:
     plan construction, file listing and any eager build-time jobs are
-    part of the measured work. Returns the
-    best wall time and the executor CPU seconds of that run, read from
+    part of the measured work. Returns the best wall time and the stage
+    figures of that run (executor CPU, shuffle, spill, ...), read from
     ``status`` (a ``perfbench.probe.StatusReader``) around it."""
     build().write.format("noop").mode("overwrite").save()
     runs = []
@@ -74,7 +74,7 @@ def timed(build, n: int, status) -> tuple[float, float]:
         t0 = time.monotonic()
         build().write.format("noop").mode("overwrite").save()
         wall = time.monotonic() - t0
-        runs.append((wall, status.stages_since(mark)["executor_cpu_s"]))
+        runs.append((wall, status.stages_since(mark)))
     return min(runs, key=lambda r: r[0])
 
 
@@ -282,9 +282,9 @@ def main() -> None:
     for name in HEADLINE:
         if name not in queries:
             continue
-        wall, cpu_s = timed(partial(queries[name], spark, sf_dir), 3, status)
+        wall, stages = timed(partial(queries[name], spark, sf_dir), 3, status)
         timings[name] = round(wall, 4)
-        cpu[name] = round(cpu_s, 4)
+        cpu[name] = round(stages["executor_cpu_s"], 4)
 
     out = {
         "metric": "headline_queries_total",

@@ -157,8 +157,9 @@ class _Sink:
 
 
 class _Status:
-    """Stands in for ``perfbench.probe.StatusReader``: each run's executor
-    CPU is its mark's index, so the kept run is identifiable."""
+    """Stands in for ``perfbench.probe.StatusReader``: each run's stage
+    figures derive from its mark's index, so the kept run is
+    identifiable."""
 
     def __init__(self):
         self.marks = 0
@@ -168,13 +169,14 @@ class _Status:
         return {"job": self.marks}
 
     def stages_since(self, mark):
-        return {"executor_cpu_s": float(mark["job"])}
+        job = float(mark["job"])
+        return {"executor_cpu_s": job, "shuffle_write_mb": 10 * job, "spill_mb": 0.0}
 
 
 def test_timed_rebuilds_inside_every_run(monkeypatch):
     """One warm run plus n timed runs, each building its own frame, so
     build-time work is part of the measurement; the result is the
-    fastest timed run's wall time and that run's CPU."""
+    fastest timed run's wall time and that run's whole stage record."""
     clock = [0.0]
     monkeypatch.setattr(bench.time, "monotonic", lambda: clock[0])
     # warm, then three timed runs: the second timed run is fastest
@@ -191,8 +193,9 @@ def test_timed_rebuilds_inside_every_run(monkeypatch):
         return _Frame()
 
     status = _Status()
-    wall, cpu = bench.timed(build, 3, status)
+    wall, stages = bench.timed(build, 3, status)
     assert builds == 1 + 3
     assert sink.walls == []
     assert status.marks == 3  # the warm run is not measured
-    assert (wall, cpu) == (0.25 + 1.5, 2.0)
+    assert wall == 0.25 + 1.5
+    assert stages == {"executor_cpu_s": 2.0, "shuffle_write_mb": 20.0, "spill_mb": 0.0}

@@ -842,7 +842,7 @@ def _register_pipeline_rag():
         AND THE VECTORS NEVER SHUFFLE (r7 rewrite; r5 attached the wide
         embedding column to the chunk counts BEFORE scoring, so the
         doc-id join exchanged ~520-byte vector rows — the 200x peak
-        stage, 212 MB in SCALE_CHECK.json; the r6 verdict proposed a
+        stage, 212 MB in SCALE.md §15; the r6 verdict proposed a
         bucketed-by-id layout to kill that exchange, but scoring FIRST
         dominates bucketing: cosine is computed map-side on the
         embeddings scan against the broadcast query set, so only

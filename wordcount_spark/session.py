@@ -43,10 +43,8 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """``extra_conf`` overrides (applied last) are for TOOLS and test
-    harnesses only — e.g. tools/scale_check.py re-enables the UI so it can
-    read per-stage shuffle bytes over the REST API, and tests/conftest.py
-    turns codegen fallback off so compile failures are hard errors; query
-    code never passes it."""
+    harnesses only — e.g. tests/conftest.py turns codegen fallback off so
+    compile failures are hard errors; query code never passes it."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (

@@ -1,5 +1,6 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
+(default sf0.1) on the session ``get_spark`` sizes (local[$SPARK_GRAFT_CPUS],
+else one thread per core this process may run on) and prints ONE JSON line.
 
 Timing = build the query, then run it to a noop sink (materializes every
 row, avoids driver-side collect overhead dominating — the reference's own
@@ -263,7 +264,6 @@ def _corpus_phase(spark, status, paths: list[str], out: dict, detail: dict) -> N
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     # EXTERNAL load, sampled before our JVM spins up
     prerun_load = os.getloadavg()[0]
@@ -272,7 +272,7 @@ def main() -> None:
     from wordcount_spark.registry import get_queries
     from wordcount_spark.session import get_spark
 
-    spark = get_spark("wordcount_spark_bench", cpus=cpus)
+    spark = get_spark("wordcount_spark_bench")
     status = StatusReader(spark)
     queries = get_queries()
 

@@ -44,6 +44,9 @@ ALLOWED: dict[tuple[str, str], tuple[int, str]] = {
     ("operators/queries_retrieval.py", "_bm25_ranked"): (3, "fixed 9-term query set, its per-term df, 1-row corpus stats"),
     ("operators/queries_retrieval.py", "eval_bm25_mrr"): (2, "fixed 9-term query set (relevance labels) + its 3-row per-qid term-count frame"),
     ("operators/queries_textstats.py", "text_heaps_law_curve"): (2, "1-row n_docs scalar fanned onto the per-doc and per-token-first-seen frames"),
+    ("operators/queries_textstats.py", "text_tfidf_top_terms"): (1, "1-row n_docs scalar"),
+    ("operators/queries_textstats.py", "text_tfidf_doc_similarity"): (1, "1-row n_docs scalar"),
+    ("operators/queries_llmprep.py", "mix_importance_resample"): (1, "1-row (n_s, n_t, v) totals"),
     ("operators/queries_textstats.py", "text_heavyhitters_twopass"): (1, "MG candidate set gated on a MEASURED count (<=1M; O(P*256) by construction); unhinted over the cap"),
     ("operators/queries_retrieval.py", "retrieval_hybrid_rrf"): (1, "3 fixed query vectors"),
     ("operators/queries_similarity.py", "similarity_topk_bruteforce"): (1, "fixed query vectors"),
@@ -52,6 +55,9 @@ ALLOWED: dict[tuple[str, str], tuple[int, str]] = {
     ("operators/queries_similarity.py", "similarity_multiquery_topk"): (3, "8-query matrix (sc.broadcast) + O(queries*k) candidates + query frame"),
     ("operators/queries_similarity.py", "similarity_pq_topk"): (3, "1-row query vector (ADC + re-rank sides) + O(50) candidate frame"),
     ("operators/queries_similarity.py", "similarity_knn_classify"): (1, "5 fixed query vectors"),
+    ("operators/queries_similarity.py", "similarity_hard_negatives"): (1, "3 fixed query vectors"),
+    ("operators/queries_similarity.py", "similarity_maxsim_multivector"): (1, "1-row pivot of 3 fixed query vectors"),
+    ("operators/queries_similarity.py", "eval_rp_lsh_recall"): (1, "1-row band values of query 0"),
     ("operators/queries_similarity.py", "eval_knn_label_precision"): (1, "20 fixed query vectors"),
     ("operators/queries_textstats.py", "unigram_logprob_scores"): (1, "1-row ln(N) scalar"),
     ("operators/queries_textstats.py", "text_bigram_logprob"): (1, "1-row n_uni scalar"),

@@ -72,6 +72,25 @@ BNLJ_OK = {
     "events_resample_interpolate",
     # 1-row n_docs scalar fanned onto the O(docs)/O(vocab) decile maps
     "text_heaps_law_curve",
+    # 1-row N / (n_s, n_t, v) totals onto term-grain frames; 3-row query
+    # block (label exclusion is the join condition); 1-row query pivot
+    "text_tfidf_top_terms",
+    "text_tfidf_doc_similarity",
+    "mix_importance_resample",
+    "similarity_hard_negatives",
+    "similarity_maxsim_multivector",
+}
+
+# lazy queries that run Spark jobs at BUILD (all others run none), and
+# must: an entry whose build runs no job fails too
+BUILD_JOBS_OK = {
+    "wordcount_ranked",  # distributed zipWithIndex sizes its partitions
+    # eager localCheckpoint of a narrow frame two branches of one action
+    # read (CLAUDE.md): survivor ids; the Misra-Gries summary (+ its count)
+    "pipeline_pretrain_full",
+    "text_heavyhitters_twopass",
+    "similarity_multiquery_topk",  # query matrix: numpy broadcast variable
+    "graph_triangle_count",  # _hint_if_small counts (ROADMAP item 2)
 }
 
 # streaming / iterative queries execute eagerly inside the callable —
@@ -144,7 +163,14 @@ _BASELINE = _signature_baseline()
 
 
 def test_no_plan_smells(spark, plan_query):
+    from wordcount_spark.plans.metrics import jobs_run
+
+    jobs0 = jobs_run(spark)
     df = _registry()[plan_query](spark, "/root/testdata/sf0.001")
+    build_jobs = jobs_run(spark) - jobs0
+    assert bool(build_jobs) == (plan_query in BUILD_JOBS_OK), (
+        f"{plan_query} runs {build_jobs} job(s) at build; see BUILD_JOBS_OK"
+    )
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan, f"{plan_query} plans a cartesian product"
     if plan_query not in BNLJ_OK:

@@ -110,39 +110,26 @@ def test_shared_column_names_rejected(spark):
         theta_join_blocked(a, b, F.lit(True), "id", "bid")
 
 
-def test_measured_grid_memoized_per_plan(spark, sf_dir, monkeypatch):
-    """Auto-sizing must not run its two count() jobs on every DataFrame
-    BUILD (ADVICE r6): plan-only sweeps (audit_plans, plan-smell tests,
-    the registry-wide text-never-shuffles scan) construct every query
-    repeatedly, and an unmemoized measured grid turns each construction
-    into real Spark jobs. Rebuilding the same logical join in the same
-    session must size the grid exactly once."""
-    from wordcount_spark.operators import relational
+def test_default_grid_builds_without_jobs(spark, sf_dir):
+    """The default grid is sized from Catalyst's byte estimates, so
+    building the join (and the registered query over it) runs no Spark
+    job, and its pairs are those of any explicit grid."""
+    from wordcount_spark.plans.metrics import jobs_run
+    from wordcount_spark.registry import get_queries
 
-    calls: list[tuple] = []
-    real = relational.theta_grid
-    monkeypatch.setattr(
-        relational, "theta_grid", lambda *a: (calls.append(a), real(*a))[1]
+    build = get_queries()["join_theta_blocked"]
+    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_acctbal")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
+    theta = F.col("c_acctbal") > F.col("s_acctbal") * 2
+
+    def pairs(df):
+        return sorted((r["s_suppkey"], r["c_custkey"]) for r in df.collect())
+
+    jobs0 = jobs_run(spark)
+    build(spark, sf_dir)
+    sized = theta_join_blocked(sup, cust, theta, "s_suppkey", "c_custkey")
+    assert jobs_run(spark) == jobs0
+    explicit = theta_join_blocked(
+        sup, cust, theta, "s_suppkey", "c_custkey", r_blocks=2, c_blocks=3
     )
-    # the memo lives ON the session (VERDICT r7 note 2: a module-global
-    # keyed on id(session) could collide after id reuse and never evicted)
-    getattr(spark, relational._GRID_MEMO_ATTR, {}).clear()
-
-    def build():  # fresh lineage each time — same semantics
-        sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_acctbal")
-        cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-        return theta_join_blocked(
-            sup, cust, F.col("c_acctbal") > F.col("s_acctbal") * 2,
-            "s_suppkey", "c_custkey",
-        )
-
-    for _ in range(3):
-        build()
-    assert len(calls) == 1, f"grid sized {len(calls)} times for one logical join"
-    # distinct inputs still get their own measurement
-    sup2 = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_acctbal")
-    theta_join_blocked(
-        sup2.limit(3), load_table(spark, sf_dir, "customer")
-        .select("c_custkey", "c_acctbal"), F.lit(True), "s_suppkey", "c_custkey",
-    )
-    assert len(calls) == 2
+    assert pairs(sized) == pairs(explicit)

@@ -72,11 +72,7 @@ def main() -> None:
     from wordcount_spark.registry import get_queries
     from wordcount_spark.session import get_spark
 
-    spark = get_spark(
-        "profile_headline",
-        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-        extra_conf={"spark.ui.enabled": "true"},
-    )
+    spark = get_spark("profile_headline", extra_conf={"spark.ui.enabled": "true"})
     queries = get_queries()
     names = args.queries or [n for n in HEADLINE if n in queries]
 

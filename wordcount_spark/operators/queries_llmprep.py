@@ -1241,9 +1241,12 @@ def _register_dsir():
 
         Scale: two corpus-token aggregations (source + target counts,
         shareable with the unigram-model pipelines), an O(vocab) weight
-        table, then one token⋈weight join re-aggregated per doc — the
-        weight table carries NO broadcast hint (vocab grows with the
-        corpus; the engine broadcasts it while small). The smoothed
+        table (totals n_s, n_t, v broadcast on as one row), then one
+        token⋈weight join re-aggregated per doc — the weight table
+        carries NO broadcast hint (vocab grows with the corpus; the
+        engine broadcasts it while small). A cross join's size estimate
+        is a product, so the final doc join plans as sort-merge until
+        AQE sees the real scores and broadcasts them. The smoothed
         weight for never-in-target tokens is ln((n_s+v)/((c_s+1)(n_t+v)))
         via the LEFT JOIN's coalesce, exactly as in the SQL."""
         docs = load_table(spark, sf_dir, "documents")
@@ -1259,16 +1262,18 @@ def _register_dsir():
             .groupBy("tok")
             .agg(F.count("*").alias("c_t"))
         )
-        n_s = toks.count()
-        n_t = toks.where(F.col("lang") == DSIR_TARGET_LANG).count()
-        v = src.count()
-        w = src.join(tgt, "tok", "left").select(
+        # the oracle's `tots` CTE
+        tots = toks.agg(
+            F.count("*").alias("n_s"),
+            F.count(F.when(F.col("lang") == DSIR_TARGET_LANG, 1)).alias("n_t"),
+        ).crossJoin(src.agg(F.count("*").alias("v")))
+        w = src.join(tgt, "tok", "left").crossJoin(F.broadcast(tots)).select(
             "tok",
             F.round(
                 F.log(
                     (F.coalesce("c_t", F.lit(0)) + 1).cast("double")
-                    * F.lit(float(n_s + v))
-                    / ((F.col("c_s") + 1) * F.lit(float(n_t + v)))
+                    * (F.col("n_s") + F.col("v")).cast("double")
+                    / ((F.col("c_s") + 1) * (F.col("n_t") + F.col("v")).cast("double"))
                 ),
                 4,
             )

@@ -968,30 +968,31 @@ def similarity_maxsim_multivector(spark: SparkSession, sf_dir: str) -> DataFrame
     """ColBERT-style MaxSim late interaction (Khattab & Zaharia 2020):
     the query is a SET of vectors (3 probes), each document is a SET (its
     label group), and score(doc) = Σ over query vectors of the max cosine
-    against any document vector. Spark-first: the 3 query vectors are
-    collected once (O(k) driver state, same as `similarity_multiquery_topk`)
-    and inlined as LITERAL arrays, so scoring is three sequential-fold
-    cosine expressions per corpus row — NO join anywhere, the corpus is
-    scanned once. Per-label maxes are order-independent; the final sum is
-    the fixed expression (m0 + m1) + m2 on both engines, so the
-    float-derived score hash-matches exactly.
+    against any document vector. Spark-first: the 3 query vectors pivot
+    into ONE broadcast row (q0, q1, q2, like the oracle's ``FILTER``), so
+    scoring is three sequential-fold cosines per corpus row, the corpus
+    is scanned once, and the build runs no job. Per-label maxes are
+    order-independent; the final sum is the fixed expression
+    (m0 + m1) + m2 on both engines, so the float-derived score
+    hash-matches exactly.
 
-    Scale: map-only scoring in codegen + one map-side-combinable
-    aggregation on label. A real multi-vector corpus keys documents by
-    id; the query-set matrix broadcasts (Arrow matmul prune as in the
-    multiquery op) and MaxSim stays one scan + one agg at any size.
+    Scale: map-side scoring + one map-side-combinable aggregation on
+    label. A real multi-vector corpus keys documents by id; the
+    query-set matrix broadcasts (Arrow matmul prune as in the multiquery
+    op) and MaxSim stays one scan + one agg at any size.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    qrows = sorted(
-        emb.filter(F.col("vec_id") < 3).select("vec_id", "embedding").collect(),
-        key=lambda r: r.vec_id,
+    e = F.col("embedding")
+    qv = [F.max(F.when(F.col("vec_id") == i, e)) for i in range(3)]
+    # query norms are computed once, in the broadcast row
+    q = emb.filter(F.col("vec_id") < 3).agg(
+        *[v.alias(f"q{i}") for i, v in enumerate(qv)],
+        *[l2_norm(v).alias(f"n{i}") for i, v in enumerate(qv)],
     )
-    corpus = emb.filter(F.col("vec_id") >= 3)
-    cs_cols = []
-    for i, r in enumerate(qrows):
-        qlit = F.array(*[F.lit(float(x)) for x in r.embedding])
-        cs_cols.append(cosine(F.col("embedding"), qlit).alias(f"cs{i}"))
-    scored = corpus.select("label", *cs_cols)
+    cs = [dot(e, F.col(f"q{i}")) / (l2_norm(e) * F.col(f"n{i}")) for i in range(3)]
+    scored = emb.filter(F.col("vec_id") >= 3).crossJoin(F.broadcast(q)).select(
+        "label", *[c.alias(f"cs{i}") for i, c in enumerate(cs)]
+    )
     m = scored.groupBy("label").agg(
         *[F.max(f"cs{i}").alias(f"m{i}") for i in range(3)]
     )
@@ -1054,9 +1055,9 @@ def eval_rp_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANY band value)? The vector-side twin of `eval_lsh_candidate_recall`
     — this measurement is what justifies (planes, bands) before trusting
     bucketed ANN at corpus scale. Truth side reuses the registered
-    brute-force top-10; the band filter is FOUR literal comparisons (the
-    query's band values collect as O(1) driver scalars), so candidate
-    generation is a map-only scan, no join.
+    brute-force top-10; the band filter is FOUR comparisons against query
+    0's band values, a one-row frame broadcast onto the band scan, so
+    candidate generation is a map-side scan and the build runs no job.
 
     Scale: signature+bands are a pure map stage; at production size the
     candidate join is an equi-join on (band_id, value) — here the audit
@@ -1098,15 +1099,18 @@ def eval_rp_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in range(4)
     ]
     bands = emb.select("vec_id", *band_cols)
-    qvals = bands.filter(F.col("vec_id") == 0).first()
-    cand = bands.filter(
-        (F.col("vec_id") != 0)
-        & (
-            (F.col("b0") == qvals["b0"])
-            | (F.col("b1") == qvals["b1"])
-            | (F.col("b2") == qvals["b2"])
-            | (F.col("b3") == qvals["b3"])
-        )
+    q = bands.filter(F.col("vec_id") == 0).select(
+        *[F.col(f"b{b}").alias(f"q{b}") for b in range(4)]
+    )
+    # semi, not cross: Catalyst sizes a cross join as a product, which
+    # would turn the truth-side semi join below into a sort-merge join
+    cand = bands.filter(F.col("vec_id") != 0).join(
+        F.broadcast(q),
+        (F.col("b0") == F.col("q0"))
+        | (F.col("b1") == F.col("q1"))
+        | (F.col("b2") == F.col("q2"))
+        | (F.col("b3") == F.col("q3")),
+        "left_semi",
     ).select("vec_id")
     truth = similarity_topk_bruteforce(spark, sf_dir).select("vec_id")
     caught = truth.join(cand, "vec_id", "left_semi")
@@ -1239,34 +1243,28 @@ def similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrieval model its decision boundary — BM25/ANN-mined hard negatives
     are standard for dense retrievers, cf. DPR/ANCE). For each of 3 query
     vectors: top-5 cosine neighbors whose label differs from the query's.
-    Query vectors and labels collect once (O(k) driver state) and inline
-    as literals — the scoring pass is a map-only scan, no join; per-query
-    ranking is a qid-partitioned window over the scored frame.
+    The 3-row (qid, qlabel, qv, qn) query block broadcasts onto the
+    corpus (the build runs no job); per-query ranking is a
+    qid-partitioned window over the scored frame.
 
     Scale: one corpus scan evaluates all queries; the label exclusion is
-    a pushed residual filter. At fleet size the per-partition top-k prune
-    of `similarity_multiquery_topk` slots in front unchanged.
+    the nested-loop join's condition. At fleet size the per-partition
+    top-k prune of `similarity_multiquery_topk` slots in front unchanged.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    qrows = sorted(
-        emb.filter(F.col("vec_id") < 3).select("vec_id", "label", "embedding").collect(),
-        key=lambda r: r.vec_id,
+    e = F.col("embedding")
+    q = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("qid"),
+        F.col("label").alias("qlabel"),
+        e.alias("qv"),
+        l2_norm(e).alias("qn"),  # once per query
     )
-    corpus = emb.filter(F.col("vec_id") >= 3)
-    per_q = []
-    for r in qrows:
-        qlit = F.array(*[F.lit(float(x)) for x in r.embedding])
-        per_q.append(
-            corpus.filter(F.col("label") != int(r.label)).select(
-                F.lit(int(r.vec_id)).alias("qid"),
-                "vec_id",
-                "label",
-                cosine(F.col("embedding"), qlit).alias("cos_sim"),
-            )
-        )
-    scored = per_q[0]
-    for frame in per_q[1:]:
-        scored = scored.unionByName(frame)
+    cos = dot(e, F.col("qv")) / (l2_norm(e) * F.col("qn"))
+    scored = (
+        emb.filter(F.col("vec_id") >= 3)
+        .join(F.broadcast(q), F.col("label") != F.col("qlabel"))
+        .select("qid", "vec_id", "label", cos.alias("cos_sim"))
+    )
     from pyspark.sql import Window
 
     w = Window.partitionBy("qid").orderBy(F.desc("cos_sim"), "vec_id")

@@ -267,7 +267,8 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 TF-IDF terms per document. Three shuffles total: (doc,term)
     agg, term doc-frequency agg (broadcast back — term vocab is small
-    relative to the corpus), and the per-doc top-k window."""
+    relative to the corpus), and the per-doc top-k window; N is a
+    one-row aggregate broadcast onto the scores, so the build runs no job."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(_toks()).alias("tok"))
     # (doc, term) grain — Zipf-compressed vs the raw token stream; pinned
@@ -277,14 +278,14 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the corpus token stream is exploded exactly ONCE (a second
     # countDistinct pass over raw tokens would re-scan everything)
     df_ = tf.groupBy("tok").agg(F.count("*").alias("df"))
-    n_docs = docs.count()  # scalar: fixed at plan time, like a broadcast var
+    n = docs.agg(F.count("*").cast("double").alias("n_docs"))
     # round(…, 6): ln() is not IEEE-correctly-rounded, so Java and libm
     # differ in the last ulp — rank and emit on the rounded value so the
     # oracle comparison (and the top-3 row selection) is engine-stable.
     # no broadcast hint on df_: vocabulary grows with the corpus (Heaps'
     # law) — the engine broadcasts it while small, shuffle-joins at scale
-    scored = tf.join(df_, "tok").withColumn(
-        "tfidf", F.round(F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")), 6)
+    scored = tf.join(df_, "tok").crossJoin(F.broadcast(n)).withColumn(
+        "tfidf", F.round(F.col("tf") * F.log(F.col("n_docs") / F.col("df")), 6)
     )
     from pyspark.sql import Window
 
@@ -1942,9 +1943,9 @@ def text_tfidf_doc_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out — dropping it bounds the per-term pair blow-up at cap²
     (exactly the trick MinHash banding uses for dedup, here for scoring).
     Engine parity: idf = round(ln(N/df), 4) fixed as DECIMAL (repo ln
-    rule), tf exact — so weights, dots, and squared norms are exact
-    decimal arithmetic; the ONLY float math is the final
-    dot/(√na·√nb), one fixed expression stable_round'ed on both sides.
+    rule; N is a broadcast one-row aggregate), tf exact — so weights,
+    dots, and squared norms are exact decimal arithmetic; the ONLY float
+    math is the final dot/(√na·√nb), stable_round'ed on both sides.
 
     Scale: tf and df are map-side-combinable aggregates; the self-join
     shuffles the df-banded weight frame once on the term key; per-term
@@ -1961,13 +1962,13 @@ def text_tfidf_doc_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("df"))
         .filter((F.col("df") >= 2) & (F.col("df") <= 20))
     )
-    n_docs = docs.count()  # scalar, fixed at plan time
-    w = tf.join(dfreq, "tok").select(
+    n = docs.agg(F.count("*").cast("double").alias("n_docs"))
+    w = tf.join(dfreq, "tok").crossJoin(F.broadcast(n)).select(
         "doc_id",
         "tok",
         (
             F.col("tf").cast("decimal(9,4)")
-            * F.round(F.log(F.lit(float(n_docs)) / F.col("df")), 4).cast(
+            * F.round(F.log(F.col("n_docs") / F.col("df")), 4).cast(
                 "decimal(9,4)"
             )
         ).alias("w"),

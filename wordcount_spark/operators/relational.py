@@ -17,6 +17,7 @@ Scale notes: dimension tables (region/nation/supplier, and part at most
 SFs) are broadcast — no shuffle of the fact table for those joins. Fact-fact
 joins (lineitem⋈orders) shuffle on the join key; AQE coalesces/splits
 post-shuffle partitions at runtime, which is the 100 TB-safe default.
+Building a frame here runs no job: the theta grid reads plan statistics.
 """
 
 from __future__ import annotations
@@ -73,14 +74,14 @@ def theta_grid(n_a: int, n_b: int, parallelism: int) -> tuple[int, int]:
     the |A|×|B| join matrix with ~``parallelism`` near-square cells so each
     reducer owns ≈ n_a*n_b/parallelism pairs — R = sqrt(n_a·P/n_b) rows,
     C = sqrt(n_b·P/n_a) columns (R·C ≈ P; for n_a = n_b this is the
-    paper's square-root rule R = C = sqrt(P)). Blocks are clamped to the
-    side's row count (an R > n_a row-block is empty) and to ≥ 1, so tiny
-    or empty inputs degrade to a single cell. Clamping one axis
-    RE-BUDGETS the other (ADVICE r6): on extreme skew the raw rule gives
-    R < 1, and pinning R to 1 while keeping the raw C blows R·C far past
-    the parallelism (n_a=2, n_b=1e6, P=32 gave a 1×4000 grid — 4000
-    reducers each holding 1/4000th of B for no balance gain), so the
-    unclamped axis is shrunk until R·C stays O(P)."""
+    paper's square-root rule R = C = sqrt(P)); sizes may be rows or
+    bytes. Blocks are clamped to the side's size and to ≥ 1, so tiny or
+    empty inputs degrade to a single cell. Clamping one axis RE-BUDGETS the other (ADVICE r6): on
+    extreme skew the raw rule gives R < 1, and pinning R to 1 while
+    keeping the raw C blows R·C far past the parallelism (n_a=2, n_b=1e6,
+    P=32 gave a 1×4000 grid — 4000 reducers each holding 1/4000th of B
+    for no balance gain), so the unclamped axis is shrunk until R·C stays
+    O(P)."""
     import math
 
     n_a, n_b, parallelism = max(n_a, 1), max(n_b, 1), max(parallelism, 1)
@@ -92,38 +93,6 @@ def theta_grid(n_a: int, n_b: int, parallelism: int) -> tuple[int, int]:
         else:
             r = max(1, math.ceil(parallelism / c))
     return r, c
-
-
-#: per-session {(a.semanticHash, b.semanticHash, parallelism) -> (R, C)}.
-#: Auto-sizing runs two eager count() jobs at DataFrame BUILD time, so
-#: without this memo every PLAN-ONLY consumer (audit_plans,
-#: test_plan_smells, the registry-wide text-never-shuffles sweep — each
-#: builds every registered query) would execute real Spark jobs just to
-#: look at the theta join's plan (ADVICE r6). The measured grid is a pure
-#: function of the two input plans and the parallelism, so caching it is
-#: exact, and the counts run at most once per (session, inputs) — O(1)
-#: driver state, bounded by the handful of distinct theta joins a
-#: session builds. The per-session dict lives ON the SparkSession object
-#: (VERDICT r7 note 2: the old module-global keyed on id(sparkSession),
-#: which CPython can reuse after a session is GC'd — a stale entry could
-#: then mis-size, never mis-compute, a later session's grid — and never
-#: evicted; an attribute dies with its session, airtight by construction).
-_GRID_MEMO_ATTR = "_wordcount_spark_grid_memo"
-
-
-def _measured_grid(a: DataFrame, b: DataFrame, parallelism: int) -> tuple[int, int]:
-    try:
-        session = a.sparkSession
-        memo: dict[tuple, tuple[int, int]] = getattr(session, _GRID_MEMO_ATTR, None)
-        if memo is None:
-            memo = {}
-            setattr(session, _GRID_MEMO_ATTR, memo)
-        key = (a.semanticHash(), b.semanticHash(), parallelism)
-    except Exception:  # analysis unavailable — size without memoizing
-        return theta_grid(a.count(), b.count(), parallelism)
-    if key not in memo:
-        memo[key] = theta_grid(a.count(), b.count(), parallelism)
-    return memo[key]
 
 
 def theta_join_blocked(
@@ -151,20 +120,18 @@ def theta_join_blocked(
     of value skew (block ids come from a hash, not from join values), so
     work is level across R*C reducers; memory per task is one A-block +
     one B-block. When ``r_blocks``/``c_blocks`` are None (the default)
-    the grid is SIZED FROM MEASURED INPUTS (VERDICT r5 item 4 — the
-    `_hint_if_small` measured-gate pattern): two O(1)-driver-state count
-    jobs feed :func:`theta_grid`, which applies the paper's square-root
-    rule against the session's default parallelism, so on a 1000-executor
-    cluster the grid widens with the cluster and each task still holds
-    one block pair. The measured grid is MEMOIZED per (session, input
-    plans, parallelism) — ADVICE r6: plan-only consumers build this
-    DataFrame repeatedly and must not pay the count jobs each time (a
-    32-bit semanticHash collision can only mis-SIZE the grid, never
-    change results). Replication multiplies shuffle bytes by C (A side)
-    and R (B side) — the documented price of a balanced theta join; for
-    predicates with a usable band structure prefer
-    `range_join_value_bands`/as-of, which prune instead of replicate.
-    Hash-assigned blocks are deterministic, so results are
+    the grid is sized from Catalyst's byte estimate of each input
+    (``optimizedPlan().stats().sizeInBytes``, which runs no job, so
+    building the join costs nothing until its action): :func:`theta_grid`
+    applies the paper's square-root rule to the two sizes against the
+    session's default parallelism, so on a 1000-executor cluster the grid
+    widens with the cluster and each task still holds one block pair.
+    The estimate only shapes the grid (its ``R ≤ n_a`` clamp becomes a
+    byte clamp); results are exact for any grid. Replication multiplies
+    shuffle bytes by C (A side) and R (B side) — the documented price of
+    a balanced theta join; for predicates with a usable band structure
+    prefer `range_join_value_bands`/as-of, which prune instead of
+    replicate. Hash-assigned blocks are deterministic, so results are
     partitioning-invariant (duplicate keys share a block — fine unless
     one key is a large fraction of a side; salt ``a_key`` with a
     secondary column then).
@@ -183,7 +150,8 @@ def theta_join_blocked(
         )
     if r_blocks is None or c_blocks is None:
         par = a.sparkSession.sparkContext.defaultParallelism
-        r_auto, c_auto = _measured_grid(a, b, par)
+        stats = [df._jdf.queryExecution().optimizedPlan().stats() for df in (a, b)]
+        r_auto, c_auto = theta_grid(*(int(s.sizeInBytes()) for s in stats), par)
         r_blocks = r_auto if r_blocks is None else r_blocks
         c_blocks = c_auto if c_blocks is None else c_blocks
     taken = set(a.columns) | set(b.columns)

@@ -214,6 +214,13 @@ EVIDENCE_RESET: dict[str, int] = {
     "graph_walks_deterministic": 12,
     "eval_lsh_candidate_recall": 12,
     "mix_temperature_weights": 12,
+    # r13: build-time counts/reads became broadcast rows (same oracle)
+    "text_tfidf_top_terms": 13,
+    "text_tfidf_doc_similarity": 13,
+    "mix_importance_resample": 13,
+    "similarity_hard_negatives": 13,
+    "similarity_maxsim_multivector": 13,
+    "eval_rp_lsh_recall": 13,
 }
 
 

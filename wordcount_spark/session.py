@@ -46,7 +46,7 @@ def get_spark(
     harnesses only — e.g. tests/conftest.py turns codegen fallback off so
     compile failures are hard errors; query code never passes it."""
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -31,8 +31,8 @@ ALLOWED: dict[tuple[str, str], tuple[int, str]] = {
     ("operators/queries_dedup.py", "pipeline_rag_corpus"): (1, "3 fixed query vectors"),
     ("operators/queries_dedup.py", "dedup_semantic_semdedup"): (1, "8 fixed seed centroids (vec_id < 8)"),
     ("operators/queries_llmprep.py", "mix_token_budget_waterfill"): (4, "1-row budget/level scalars onto the O(sources) frame"),
-    ("operators/queries_llmprep.py", "mix_rebalance_to_min"): (2, "1-row min scalar + O(langs) rate table (fixed lang enumeration)"),
-    ("operators/queries_llmprep.py", "pipeline_pretrain_full"): (2, "1-row min scalar + O(langs) rate table"),
+    ("operators/queries_llmprep.py", "mix_rebalance_to_min"): (1, "O(langs) rate table (fixed lang enumeration)"),
+    ("operators/queries_llmprep.py", "pipeline_pretrain_full"): (1, "O(langs) rate table"),
     ("operators/queries_llmprep.py", "mix_epoch_repeats"): (2, "1-row max scalar + O(sources) weight table"),
     ("operators/queries_llmprep.py", "mix_temperature_weights"): (1, "1-row normalization scalar"),
     ("operators/queries_llmprep.py", "curriculum_quality_buckets"): (1, "1-row percentile-cuts scalar"),

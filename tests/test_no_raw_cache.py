@@ -3,8 +3,9 @@
 Query functions return lazy frames and cannot unpersist after the
 consuming job, so every shared-frame pin in package source goes through
 ``operators/caching.bounded_cache`` (the static scan below), and
-``registry.get_queries()`` releases those pins before each build. No pin
-survives into the next query, so Spark's CacheManager cannot substitute
+``registry.get_queries()`` releases those pins (and the eager
+``localCheckpoint``s of ``caching.bounded_checkpoint``) before each
+build. No pin survives into the next query, so Spark's CacheManager cannot substitute
 one query's cached fragment into another's plan: a plan no longer
 depends on which queries ran before it in the session.
 """
@@ -99,3 +100,23 @@ def test_next_build_releases_pins(spark, sf_dir):
     assert persistent().size() == start, (
         f"{persistent().size() - start} RDD(s) still pinned after the next build"
     )
+
+
+@pytest.mark.parametrize("name", ["pipeline_pretrain_full", "text_heavyhitters_twopass"])
+def test_checkpoints_released_with_pins(spark, name):
+    """A build's eager localCheckpoint (``caching.bounded_checkpoint``)
+    is released with its pins at the next build: repeated build-and-
+    action cycles leave at most the last build's checkpoint persisted."""
+    from wordcount_spark.registry import get_queries
+
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    qs = get_queries()
+    for _ in range(3):
+        qs[name](spark, "/root/testdata/sf0.001").write.format("noop").mode(
+            "overwrite"
+        ).save()
+    left = persisted() - before
+    assert len(left) <= 1, f"{name} left {len(left)} persisted RDDs after 3 runs"

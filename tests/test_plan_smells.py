@@ -13,7 +13,8 @@ from wordcount_spark.plans.explain import formatted_plan
 
 # queries that intentionally join a 1-row broadcast side with no equi-key
 # (query-vector fan-out, scalar-subquery threshold) — planned as
-# BroadcastNestedLoopJoin on purpose
+# BroadcastNestedLoopJoin on purpose, and must: an entry whose plan has
+# none fails too
 BNLJ_OK = {
     "similarity_topk_bruteforce",
     "similarity_binary_hamming_topk",  # 1-row broadcast query-signature fan-out
@@ -28,7 +29,6 @@ BNLJ_OK = {
     "text_unigram_logprob",
     # dense-grid spine: (time-span × |event_type|) cross join of two
     # post-aggregation frames, both bucket-count sized by construction
-    "events_gapfill_hourly",
     "events_resample_ffill",
     # 1-row × 1-row final stitch (triangle total × wedge total) and 1-row
     # normalizing-constant fan-out (n_uni/n_bi onto the bigram table; the
@@ -38,12 +38,9 @@ BNLJ_OK = {
     "text_bigram_logprob",
     "mix_epoch_repeats",
     # 1-row normalizer frames fanned onto group-count-sized tables (the
-    # sqrt-sum/total pair; the three percentile cut points; the global
-    # min-stratum-count scalar)
+    # sqrt-sum/total pair; the three percentile cut points)
     "mix_temperature_weights",
     "curriculum_quality_buckets",
-    "mix_rebalance_to_min",
-    "pipeline_pretrain_full",
     # 1-row corpus-stats (N, avgdl) fan-out onto the query-vocabulary tf
     # frame; 3-row broadcast query-vector fan-out on the cosine side
     "retrieval_bm25_topk",
@@ -173,10 +170,9 @@ def test_no_plan_smells(spark, plan_query):
     )
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan, f"{plan_query} plans a cartesian product"
-    if plan_query not in BNLJ_OK:
-        assert "BroadcastNestedLoopJoin" not in plan, (
-            f"{plan_query} plans an unintended nested-loop join"
-        )
+    assert ("BroadcastNestedLoopJoin" in plan) == (plan_query in BNLJ_OK), (
+        f"{plan_query} plans a nested-loop join iff it is in BNLJ_OK; see BNLJ_OK"
+    )
     if plan_query not in GLOBAL_WINDOW_OK:
         bad = _unpartitioned_windows(plan)
         assert not bad, (

@@ -20,7 +20,7 @@ SHUFFLE_BUDGET = {
     "wordcount_per_source": 4,
     "q1_pricing_summary": 2,  # one agg exchange + result sort
     "q3_shipping_priority": 3,  # fact-fact join + agg (top-k needs no sort)
-    "q9_pseudo_profit": 3,  # lineitem⋈orders + agg + sort (dims broadcast)
+    "q9_pseudo_profit": 2,  # lineitem⋈orders + agg (dims broadcast; one-task sort)
     "q21_waiting_suppliers": 6,  # join + 2-level agg + join-back + agg + sort
     "window_session": 3,  # session agg + sort
     "events_funnel": 3,  # user agg + sort

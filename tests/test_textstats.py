@@ -75,3 +75,45 @@ def test_pandas_udf_normalizer_crosscheck(spark):
     ).collect()
     for r in rows:
         assert r["expr_norm"] == r["udf_norm"], r["tok"]
+
+
+#: six documents whose terms have document frequency 2..6 (one term 1),
+#: inside text_tfidf_doc_similarity's 2 <= df <= 20 band; the registry
+#: test corpora keep no term in that band, so their parity is 0 rows
+_TFIDF_DOCS = [
+    "the apple banana cherry apple date",
+    "The Banana cherry elder fig",
+    "the apple fig grape grape",
+    "the cherry date elder honeydew",
+    "the grape apple banana kiwi",
+    "the date fig kiwi cherry zebra",
+]
+
+
+def test_tfidf_doc_similarity_matches_oracle_on_banded_corpus(spark, tmp_path):
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.conftest import SF_DIR, _TABLES, assert_matches_oracle
+    from wordcount_spark.registry import get_oracles, get_queries
+
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(len(_TFIDF_DOCS)), pa.int64()),
+                "text": _TFIDF_DOCS,
+                "lang": ["en"] * len(_TFIDF_DOCS),
+                "source": ["web"] * len(_TFIDF_DOCS),
+                "n_chars": pa.array([len(t) for t in _TFIDF_DOCS], pa.int64()),
+            }
+        ),
+        tmp_path / "documents.parquet",
+    )
+    for t in set(_TABLES) - {"documents"}:  # the oracle's views need every table
+        os.symlink(f"{SF_DIR}/{t}.parquet", tmp_path / f"{t}.parquet")
+    name = "text_tfidf_doc_similarity"
+    df = get_queries()[name](spark, str(tmp_path))
+    assert df.count() > 0
+    assert_matches_oracle(df, get_oracles()[name], str(tmp_path))

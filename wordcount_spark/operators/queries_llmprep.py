@@ -24,7 +24,8 @@ from pyspark.sql import functions as F
 from wordcount_spark.operators.queries_textstats import _TOKS_SQL, _toks
 from wordcount_spark.registry import register
 from wordcount_spark.sources.readers import load_table
-from wordcount_spark.operators.caching import bounded_cache
+from wordcount_spark.operators.caching import bounded_cache, bounded_checkpoint
+from wordcount_spark.operators.relational import sort_small
 
 #: chunk window size / stride (tokens); stride < size ⇒ overlap
 CHUNK_W = 32
@@ -290,44 +291,52 @@ def mix_rebalance_to_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure hash of doc_id, so re-runs, retries, and the oracle select the
     same rows.
 
-    Scale: one tiny counts aggregate, rates broadcast back, then a narrow
-    per-row filter — the full corpus is scanned once and never shuffled.
-    The md5 bucket has 10k granularity; realized n_kept therefore tracks
-    rate*n_orig only statistically (binomial), which is what production
-    mixture sampling does too. The global min is an agg scalar broadcast
-    back onto the counts frame (not an unpartitioned window: counts is
-    O(langs) so either is safe, but WindowExec-without-partition warnings
-    are indistinguishable from real single-partition hazards in a log
-    scan — tests/test_plan_smells.py bans the pattern outright)."""
+    Scale: one tiny counts aggregate folded into the O(langs) rate table
+    (``min_stratum_rates``), broadcast back onto a second scan whose
+    per-row hash decision is counted per stratum — the corpus is never
+    shuffled, only its per-language partial counts. Every stratum with a
+    document keeps its row (``n_kept`` counts the sampled ones, possibly
+    0), so no join back onto the rates is needed. The md5 bucket has 10k
+    granularity; realized n_kept therefore tracks rate*n_orig only
+    statistically (binomial), which is what production mixture sampling
+    does too. The O(langs) result is sorted in one task (``sort_small``)."""
     docs = load_table(spark, sf_dir, "documents")
-    # cached: the scalar-min branch and the rates branch both consume this
-    # O(langs) frame, and Spark does not reuse exchanges across branches —
-    # without the cache the documents scan+agg runs twice
-    counts = bounded_cache(docs.groupBy("lang").agg(F.count("*").alias("n_orig")))
-    min_n = counts.agg(F.min("n_orig").alias("min_n_orig"))
-    rates = counts.crossJoin(F.broadcast(min_n)).select(
-        "lang",
-        "n_orig",
-        (F.col("min_n_orig").cast("double") / F.col("n_orig")).alias("rate"),
-    )
+    rates = min_stratum_rates(docs, "n_orig")
     bucket = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 7), 16, 10
     ).cast("long") % 10000
-    kept = (
-        docs.join(F.broadcast(rates.select("lang", "rate")), "lang")
-        .where(bucket < F.col("rate") * 10000)
-        .groupBy("lang")
-        .agg(F.count("*").alias("n_kept"))
+    # null-safe so a NULL-lang stratum keeps its row, as in the oracle's
+    # LEFT JOIN, while its docs stay out of `kept` (the oracle's inner
+    # join drops them)
+    kept = docs["lang"].isNotNull() & (bucket < F.col("rate") * 10000)
+    counted = (
+        docs.join(F.broadcast(rates), docs["lang"].eqNullSafe(rates["lang"]))
+        .groupBy(rates["lang"], "n_orig", "rate")
+        .agg(F.count(F.when(kept, 1)).alias("n_kept"))
     )
+    return sort_small(counted, "lang")
+
+
+def min_stratum_rates(df: DataFrame, n: str) -> DataFrame:
+    """(lang, ``n``, rate) per language stratum of ``df``: ``n`` rows in
+    the stratum, rate = (smallest stratum's ``n``) / ``n``. One global
+    aggregate over the O(langs) counts carries the minimum and every
+    (lang, n) pair, exploded back into rows, so the counts are read once,
+    with no cache pin and no cross join of a 1-row minimum. (Not an
+    unpartitioned window either: tests/test_plan_smells.py bans
+    WindowExec without a partition spec outright.)"""
+    counts = df.groupBy("lang").agg(F.count("*").alias(n))
     return (
-        rates.join(kept, "lang", "left")
-        .select(
-            "lang",
-            "n_orig",
-            "rate",
-            F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
+        counts.agg(
+            F.min(n).alias("min_n"),
+            F.collect_list(F.struct("lang", n)).alias("strata"),
         )
-        .orderBy("lang")
+        .select("min_n", F.explode("strata").alias("s"))
+        .select(
+            "s.lang",
+            f"s.{n}",
+            (F.col("min_n").cast("double") / F.col(f"s.{n}")).alias("rate"),
+        )
     )
 
 
@@ -448,7 +457,10 @@ def pipeline_pretrain_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash so the two decisions are independent), so no shuffle — chunks
     of one doc always land one side. The narrow survivor-id table is
     eagerly persisted between stages (localCheckpoint — see the inline
-    note) so concurrent branch scheduling cannot recompute it."""
+    note) so concurrent branch scheduling cannot recompute it; its
+    per-language rates are one global aggregate over O(langs) counts
+    (``min_stratum_rates``), broadcast onto it by lang; the O(langs × 2)
+    report is sorted in one task (``sort_small``)."""
     docs = load_table(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
@@ -468,19 +480,8 @@ def pipeline_pretrain_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     # enforcement tests can still see it (ADVICE r6: localCheckpoint
     # truncates lineage, which would otherwise hide this sub-plan from
     # test_text_never_shuffles and the shuffle-budget checks).
-    survivor_ids = pretrain_survivor_ids_plan(q).localCheckpoint()
-    # cached (O(langs)): min branch + rates branch share one aggregation
-    counts = bounded_cache(
-        survivor_ids.groupBy("lang").agg(F.count("*").alias("n"))
-    )
-    # global min as an agg scalar + broadcast cross-join (unpartitioned
-    # WindowExec is banned by tests/test_plan_smells.py — see
-    # mix_rebalance_to_min)
-    min_n = counts.agg(F.min("n").alias("min_n"))
-    rates = counts.crossJoin(F.broadcast(min_n)).select(
-        "lang",
-        (F.col("min_n").cast("double") / F.col("n")).alias("rate"),
-    )
+    survivor_ids = bounded_checkpoint(pretrain_survivor_ids_plan(q))
+    rates = min_stratum_rates(survivor_ids, "n").select("lang", "rate")
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 7), 16, 10)
         .cast("long")
@@ -524,7 +525,7 @@ def pipeline_pretrain_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long")
         % 10
     )
-    return (
+    report = (
         uchunks.withColumn(
             "split",
             F.when(split_bucket == 0, F.lit("holdout")).otherwise(F.lit("train")),
@@ -535,8 +536,8 @@ def pipeline_pretrain_full(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_chunks"),
             F.sum("n_tok").alias("n_tokens"),
         )
-        .orderBy("lang", "split")
     )
+    return sort_small(report, "lang", "split")
 
 
 _BPE_STEPS = 5

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from wordcount_spark.operators.relational import dec, stable_round_sql
 from wordcount_spark.registry import register
 from wordcount_spark.sources.readers import load_table
-from wordcount_spark.operators.caching import bounded_cache
+from wordcount_spark.operators.caching import bounded_cache, bounded_checkpoint
 
 #: tiny per-language stopword lexicons (language-ID heuristic)
 LANG_LEXICONS: dict[str, list[str]] = {
@@ -1597,9 +1597,11 @@ def text_heavyhitters_twopass(spark: SparkSession, sf_dir: str) -> DataFrame:
     # O(P×capacity) rows materialized once; both branches below read it.
     # Pass 1 crosses the Arrow boundary as token ARRAYS (per-doc rows) —
     # ~2× cheaper than per-token rows at 50× data (r4 profile).
-    summ = misra_gries_summary_arrays(
-        docs.select(tok_arr.alias("toks")), "toks", "tok", capacity=256
-    ).localCheckpoint(eager=True)
+    summ = bounded_checkpoint(
+        misra_gries_summary_arrays(
+            docs.select(tok_arr.alias("toks")), "toks", "tok", capacity=256
+        )
+    )
     cand = summ.where(F.col("tok").isNotNull()).select("tok").distinct()
     # broadcast hint gated on a MEASURED count (the cheap count reads the
     # checkpointed O(P×256) summary, not the stream): without the hint

@@ -8,8 +8,8 @@ Scale notes (the whole point of these shapes at 100 TB):
   a function of the *time span*, not the data volume, so it stays tiny
   (720 hours × 5 types here) no matter how many raw events exist. The only
   big operation is the hourly hash-aggregation of the raw scan (map-side
-  partial combine, one shuffle on (bucket, type)); the spine join touches
-  post-aggregation data only.
+  partial combine, one shuffle on (bucket, type)); the spine is filled
+  from one global aggregate of post-aggregation data.
 - **Multi-grain rollup**: aggregate the raw data ONCE at the finest grain,
   then derive every coarser grain *from the fine aggregate* (hour → day is
   a few-thousand-row shuffle). Grouping-sets over the raw input would
@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wordcount_spark.operators.relational import dec
+from wordcount_spark.operators.relational import dec, sort_small
 from wordcount_spark.registry import register
 from wordcount_spark.sources.readers import load_table
 from wordcount_spark.operators.caching import bounded_cache
@@ -71,38 +71,63 @@ def events_gapfill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     span, zero-filled where no events landed (timeseries DBs call this
     gap-filling; the reference has nothing temporal — SURVEY.md §2.7).
 
-    The spine is generated with ``sequence(min, max, 1 hour)`` (both ends
-    inclusive, same as DuckDB ``generate_series``) crossed with the distinct
-    types — both post-aggregation and tiny, so the left join broadcasts.
+    Plan shape: one scan of the fact table and its hourly aggregate (the
+    only shuffle of raw-event partials), then ONE global aggregate over
+    that O(hours × types) frame that carries everything the spine needs:
+    ``min``/``max(bucket_hour)`` (equal to the hour-truncated span of raw
+    ``ts``), the sorted distinct types, and the observed cells as a
+    (hour, type) → (count, sum) map. Two explodes (``sequence(lo, hi, 1
+    hour)``, both ends inclusive like DuckDB ``generate_series``, and the
+    types) generate the grid, and a map lookup fills it, so there is no
+    cache pin read by several branches and no spine cross join. The
+    one-row map holds the same O(hours × types) cells the older
+    broadcast-join plan shipped to every task; the grid is produced by a
+    single task, sorted in place (``sort_small``).
+
+    Scale: the grid is a function of the time SPAN × |types|, not of the
+    event volume (720 × 5 cells here). At 100 TB the hourly aggregate is
+    the cost; a span of years at a fine grain makes the one-row map and
+    the one grid task the limit, and the fallback is to gap-fill per
+    type (or per span slice) as a grouped aggregate instead of a global
+    one.
     """
-    # span and types are derived FROM the cached hourly aggregate, not the
-    # raw table: min/max(date_trunc(hour, ts)) == min/max(bucket_hour) and
-    # the distinct types all appear in the aggregate, so the fact table is
-    # scanned ONCE instead of three times (r10 optimization — at 100 TB
-    # the two extra scans were the dominant cost; locally they were 2 of
-    # this query's 8 stages). hourly is O(buckets × types): a tiny pin.
-    hourly = bounded_cache(
-        _hourly(spark, sf_dir).withColumnRenamed("n_events", "n_raw")
+    hourly = _hourly(spark, sf_dir)
+    cell = F.struct("bucket_hour", "event_type")
+    summary = hourly.agg(
+        F.min("bucket_hour").alias("lo"),
+        F.max("bucket_hour").alias("hi"),
+        # struct-wrapped so a NULL type stays in the spine like the
+        # oracle's DISTINCT; its cells stay out of the map, as a NULL
+        # join key never matches
+        F.array_sort(F.collect_set(F.struct("event_type"))).alias("types"),
+        F.map_from_entries(
+            F.collect_list(
+                F.when(
+                    F.col("event_type").isNotNull(),
+                    F.struct(cell, F.struct("n_events", "sum_value")),
+                )
+            )
+        ).alias("cells"),
     )
-    span = hourly.agg(
-        F.min("bucket_hour").alias("lo"), F.max("bucket_hour").alias("hi")
-    )
-    spine = span.select(
+    grid = summary.select(
         F.explode(F.sequence("lo", "hi", F.expr("interval 1 hour"))).alias(
             "bucket_hour"
-        )
+        ),
+        "types",
+        "cells",
+    ).select(
+        "bucket_hour", F.explode("types.event_type").alias("event_type"), "cells"
     )
-    types = hourly.select("event_type").distinct()
-    grid = spine.crossJoin(types)
-    return (
-        grid.join(hourly, ["bucket_hour", "event_type"], "left")
-        .select(
+    found = F.col("cells")[cell]
+    return sort_small(
+        grid.select(
             "bucket_hour",
             "event_type",
-            F.coalesce("n_raw", F.lit(0)).alias("n_events"),
-            F.coalesce("sum_value", F.lit(0)).cast("double").alias("sum_value"),
-        )
-        .orderBy("bucket_hour", "event_type")
+            F.coalesce(found["n_events"], F.lit(0)).alias("n_events"),
+            F.coalesce(found["sum_value"], F.lit(0)).cast("double").alias("sum_value"),
+        ),
+        "bucket_hour",
+        "event_type",
     )
 
 
@@ -144,7 +169,8 @@ def events_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     before a type's first observation stay NULL, faithfully."""
     ev = load_table(spark, sf_dir, "events")
     # span/types from the cached hourly aggregate — one fact scan, not
-    # three (same derivation argument as events_gapfill_hourly above)
+    # three: min/max(bucket_hour) is the hour-truncated span of raw ts,
+    # and every type appears in the aggregate
     hourly = bounded_cache(
         ev.groupBy(
             F.date_trunc("hour", "ts").alias("bucket_hour"), "event_type"

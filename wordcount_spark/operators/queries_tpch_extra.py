@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wordcount_spark.operators.relational import dec
+from wordcount_spark.operators.relational import dec, sort_small
 from wordcount_spark.registry import register
 from wordcount_spark.sources.readers import load_table
 from wordcount_spark.operators.caching import bounded_cache
@@ -532,7 +532,9 @@ def q9_pseudo_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_type filter prunes lineitem rows *before* the only fact-fact shuffle,
     lineitem⋈orders). Revenue and cost are summed as exact decimals
     (order-independent); profit is one deterministic double subtraction at
-    the end, so Spark and DuckDB hash-match.
+    the end, so Spark and DuckDB hash-match. The result is O(nations ×
+    years) rows at any scale, so its ORDER BY is a one-task sort
+    (``sort_small``): no range-sampling job, no range exchange.
     """
     li = _t(spark, sf_dir, "lineitem")
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
@@ -555,15 +557,10 @@ def q9_pseudo_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cost"),
         )
     )
-    return (
-        amounts.groupBy(F.col("s_nationkey").alias("nationkey"), "o_year")
-        .agg(
-            (
-                F.sum("revenue").cast("double") - F.sum("cost").cast("double")
-            ).alias("profit")
-        )
-        .orderBy("nationkey", "o_year")
+    profit = amounts.groupBy(F.col("s_nationkey").alias("nationkey"), "o_year").agg(
+        (F.sum("revenue").cast("double") - F.sum("cost").cast("double")).alias("profit")
     )
+    return sort_small(profit, "nationkey", "o_year")
 
 
 @register(

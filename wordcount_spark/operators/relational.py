@@ -69,6 +69,17 @@ def dbl(col: Column | str) -> Column:
     return F.col(col).cast("double") if isinstance(col, str) else col.cast("double")
 
 
+def sort_small(df: DataFrame, *cols) -> DataFrame:
+    """ORDER BY for an O(groups) result: ``coalesce(1)`` then
+    ``sortWithinPartitions``. A global ``orderBy`` runs a job of its own
+    to sample range bounds and then a range exchange; for a few thousand
+    rows those fixed costs are most of the query. Here the stage that
+    produces the result runs as one task and sorts it in place, so the
+    collected rows come back in order with no extra job or shuffle.
+    Never for an output that grows with the data: one task holds it all."""
+    return df.coalesce(1).sortWithinPartitions(*cols)
+
+
 def theta_grid(n_a: int, n_b: int, parallelism: int) -> tuple[int, int]:
     """1-Bucket-Theta grid sizing (Okcan & Riedewald SIGMOD 2011 §4): tile
     the |A|×|B| join matrix with ~``parallelism`` near-square cells so each

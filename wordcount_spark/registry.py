@@ -221,6 +221,14 @@ EVIDENCE_RESET: dict[str, int] = {
     "similarity_hard_negatives": 13,
     "similarity_maxsim_multivector": 13,
     "eval_rp_lsh_recall": 13,
+    # r14: O(groups) results sort in one task (no range exchange), and the
+    # hourly / per-language pins read by several branches became one
+    # global aggregate each (same oracles; the rebalance query also
+    # counts kept docs per stratum instead of joining back onto its rates)
+    "q9_pseudo_profit": 14,
+    "events_gapfill_hourly": 14,
+    "pipeline_pretrain_full": 14,
+    "mix_rebalance_to_min": 14,
 }
 
 

@@ -8,7 +8,10 @@ per-language/per-source/per-nation tables. Frames that grow with the base
 data (dimension tables at TPC-H SF, vocabulary/model tables, per-user
 profiles, degree/adjacency tables, rank vectors) must NOT be hinted — the
 engine picks broadcast while they actually fit and a shuffle join when
-they don't (that flip is the thing a hint destroys).
+they don't (that flip is the thing a hint destroys). Gating a hint on a
+build-time ``count()`` only re-does that choice with an extra job; the
+one gated site left (``text_heavyhitters_twopass``) keeps the token
+stream from being shuffled before AQE could convert the join.
 
 This test AST-scans the package for ``*.broadcast(...)`` call sites
 (``F.broadcast`` hints and ``sparkContext.broadcast`` variables alike)
@@ -27,7 +30,6 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), 
 #: (module relpath, innermost enclosing function) -> (site count, bound)
 ALLOWED: dict[tuple[str, str], tuple[int, str]] = {
     ("operators/queries_asof.py", "range_join_value_bands"): (1, "4 literal value bands"),
-    ("operators/queries_graph.py", "_hint_if_small"): (1, "gated on a MEASURED row count (cached frame); unhinted over the cap"),
     ("operators/queries_dedup.py", "pipeline_rag_corpus"): (1, "3 fixed query vectors"),
     ("operators/queries_dedup.py", "dedup_semantic_semdedup"): (1, "8 fixed seed centroids (vec_id < 8)"),
     ("operators/queries_llmprep.py", "mix_token_budget_waterfill"): (4, "1-row budget/level scalars onto the O(sources) frame"),

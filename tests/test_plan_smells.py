@@ -87,7 +87,6 @@ BUILD_JOBS_OK = {
     "pipeline_pretrain_full",
     "text_heavyhitters_twopass",
     "similarity_multiquery_topk",  # query matrix: numpy broadcast variable
-    "graph_triangle_count",  # _hint_if_small counts (ROADMAP item 2)
 }
 
 # streaming / iterative queries execute eagerly inside the callable —

@@ -8,16 +8,16 @@ weight = number of co-occurring orders, both directions present. Ranks
 use the simplified formulation (no dangling-mass redistribution): nodes
 with no in-edges settle at (1-d)/N.
 
-Scale notes: each iteration is one shuffle join (edges ⋈ ranks on src)
-plus one aggregation shuffle on dst — the textbook Pregel/GraphX pattern
-expressed as DataFrames. The edge list is the big invariant side: it is
-cached once and its partitioning is reused every iteration; the rank
-vector is |V|-sized and its broadcast hint is gated on the measured node
-count (broadcast while small, shuffle join at scale). A fixed iteration
-count
-(K=5) keeps the oracle expressible as unrolled SQL; production would loop
-to an L1-delta threshold with ``localCheckpoint`` every few rounds to
-truncate lineage.
+Scale notes: each iteration is one join (edges ⋈ ranks on src) plus one
+aggregation shuffle on dst — the textbook Pregel/GraphX pattern expressed
+as DataFrames. The edge list is the big invariant side: it is cached once
+and its partitioning is reused every iteration. The rank join carries no
+hint: the rank vector is a |V|-sized checkpoint whose size the planner
+knows, so it broadcasts while it fits under the broadcast threshold and
+becomes a shuffle join past it (sf0.1: broadcast). A fixed iteration
+count (K=5) keeps the oracle expressible as unrolled SQL; production
+would loop to an L1-delta threshold with ``localCheckpoint`` every few
+rounds to truncate lineage.
 
 Float determinism: per-node contribution sums are order-dependent double
 additions (~1e-15 relative drift between engines); ranks are rounded to
@@ -29,7 +29,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wordcount_spark.operators.relational import dbl, stable_round, stable_round_sql
+from wordcount_spark.operators.relational import (
+    dbl,
+    sort_small,
+    stable_round,
+    stable_round_sql,
+)
 from wordcount_spark.registry import register
 from wordcount_spark.sources.readers import load_table
 from wordcount_spark.operators.caching import bounded_cache
@@ -39,22 +44,6 @@ from wordcount_spark.operators.caching import bounded_cache
 # 1 - 0.85 in float is 0.15000000000000002, not the 0.15 literal the SQL
 # needs to match bit-for-bit
 _K = 5  # fixed power iterations (mirrored exactly in the oracle)
-
-#: Broadcast row cap for the computed-size gate below: ~2M rows of narrow
-#: (long, long/double) tuples is a few tens of MB serialized — cheap to
-#: ship even to a 1000-executor cluster, and far below executor memory.
-_BCAST_ROW_CAP = 2_000_000
-
-
-def _hint_if_small(df: DataFrame, n_rows: int) -> DataFrame:
-    """Broadcast hint GATED on a measured row count (VERDICT r2 item 3's
-    accepted alternative to an unconditional hint): the degree/adjacency/
-    rank frames grow with the graph, so an unconditional ``F.broadcast``
-    would ship a multi-GB frame to every executor at 100x scale. The
-    callers hold these frames cached, so the gating ``count()`` is an
-    O(1)-cost action that doubles as the cache materializer. Over the cap
-    the frame is returned unhinted and the engine plans a shuffle join."""
-    return F.broadcast(df) if n_rows <= _BCAST_ROW_CAP else df
 
 
 def _oracle() -> str:
@@ -128,13 +117,11 @@ def graph_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = nodes.count()
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     for _ in range(_K):
-        # the big cached edge list never moves: the |V|-sized rank vector
-        # broadcasts to it ONLY under the measured-size gate (n is already
-        # in hand from the initializer); at billions of nodes the gate
-        # fails and this becomes a shuffle join that reuses e's cached
-        # src-partitioning — the flip an unconditional hint would destroy
+        # the big cached edge list never moves while the rank vector fits
+        # under the broadcast threshold; past it the join shuffles and
+        # reuses e's cached src-partitioning
         contrib = (
-            e.join(_hint_if_small(ranks, n), e["src"] == ranks["node"])
+            e.join(ranks, e["src"] == ranks["node"])
             .groupBy("dst")
             .agg(F.sum(F.col("frac") * F.col("rank")).alias("c"))
         )
@@ -283,14 +270,13 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins are mandatory, cf. ``graph_triangle_count``).
 
     Scale: edges → one union-all projection → two narrow aggregations; the
-    histogram is tiny (distinct degrees ≪ |V|)."""
+    histogram is tiny (distinct degrees ≪ |V|: 177 at sf0.1), so it sorts
+    in one task (``sort_small``)."""
     und = _undirected_copurchase(spark, sf_dir)
-    deg = _degrees(und)
-    return (
-        deg.groupBy(F.col("d").alias("degree"))
-        .agg(F.count("*").alias("n_nodes"))
-        .orderBy("degree")
+    hist = _degrees(und).groupBy(F.col("d").alias("degree")).agg(
+        F.count("*").alias("n_nodes")
     )
+    return sort_small(hist, "degree")
 
 
 @register(
@@ -336,20 +322,28 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge-iterator variant — per-src out-neighbor arrays, one row per
     edge (u→v), triangles = |N⁺(u) ∩ N⁺(v)| via `array_intersect` — so
     the O(wedges) work happens inside a map-side array intersection
-    instead of a join carrying one row per wedge. The adjacency table is
-    |E|-sized longs; its broadcast hint is GATED on the measured edge
-    count (``_hint_if_small``) — under the cap it broadcasts (bench SF),
-    over it the plan flips to a shuffle join on src/dst, still never
-    materializing wedges; an unconditional hint would pin the small-data
-    plan forever. The DuckDB oracle keeps the classic wedge-close join —
+    instead of a join carrying one row per wedge. Forms that explode
+    N⁺(v) into candidate rows and semi-join them against the edges
+    materialize Σ outdeg(dst) rows instead (49.2M at sf0.1) and cost
+    twice the executor CPU even with every join broadcast (22.4 s
+    against 11.0 s, SCALE.md §24).
+
+    No join carries a hint: AQE picks each strategy at runtime from real
+    sizes. The edge side is the adjacency pin exploded back rather than a
+    pin of its own, so the edge scan and both probe sides hang off ONE
+    cache stage. AQE materializes that stage before it plans any exchange
+    over it, sees the |E|-longs adjacency fits, and broadcasts it (sf0.1:
+    every join a BroadcastHashJoin, no build-time job); past the broadcast
+    threshold the joins shuffle on src/dst, still never materializing
+    wedges. With a separate edge pin, that pin's ``hashpartitioning(src)``
+    exchange runs before the adjacency's size is known, and the broadcast
+    conversion comes too late (sf0.1: 35.1 against 23.6 MB shuffle
+    write). The DuckDB oracle keeps the classic wedge-close join —
     two independent algorithms must agree, which is the point.
     """
     und = _undirected_copurchase(spark, sf_dir)
-    # cached: deg feeds the orientation (twice) AND the wedge count, and o
-    # feeds the adjacency build AND the edge scan — without the caches the
-    # basket self-expansion of lineitem re-runs up to 5x (no cross-branch
-    # exchange reuse). deg is node-cardinality; o is |E| rows of 3 longs —
-    # both standard pins for a triangle-count job at any scale.
+    # cached: deg feeds the orientation (twice) AND the wedge count; it is
+    # node-cardinality, a standard pin for a triangle-count job at any scale
     deg = bounded_cache(_degrees(und))
     # orient: src = lower (degree, id) endpoint; struct comparison gives the
     # lexicographic (d, node) order in both engines
@@ -357,44 +351,29 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     lower_u = F.struct(F.col("du.d"), F.col("u")) < F.struct(
         F.col("dv.d"), F.col("v")
     )
-    # deg is O(V) and adjacency is O(|E|) — both grow with the graph, so
-    # their broadcast hints are GATED on measured counts (_hint_if_small):
-    # at bench SF they broadcast (the plan an unconditional hint forced);
-    # past the cap they shuffle-join. The counts materialize the caches
-    # the downstream branches reuse anyway.
-    n_nodes = deg.count()
-    o = (
-        und.join(_hint_if_small(du, n_nodes), F.col("du.node") == F.col("u"))
-        .join(_hint_if_small(dv, n_nodes), F.col("dv.node") == F.col("v"))
+    # cached: the closing stage reads it three times (edge scan, both probe
+    # sides), and an uncached adjacency re-runs its groupBy(src) +
+    # collect_list exchange once per reader (measured r10: two identical
+    # 12.9 MB exchanges per action at sf0.1). O(|E|) longs.
+    adj = bounded_cache(
+        und.join(du, F.col("du.node") == F.col("u"))
+        .join(dv, F.col("dv.node") == F.col("v"))
         .select(
             F.when(lower_u, F.col("u")).otherwise(F.col("v")).alias("src"),
             F.when(lower_u, F.col("v")).otherwise(F.col("u")).alias("dst"),
-            F.when(lower_u, F.col("dv.d")).otherwise(F.col("du.d")).alias("ddst"),
         )
-        .transform(bounded_cache)
+        .groupBy("src")
+        .agg(F.collect_list("dst").alias("nbrs"))
     )
-    # one pass builds adjacency, a second scans edges: a triangle x<y<z
-    # (in (deg, id) order) is found exactly once, at edge (x→y), as
-    # z ∈ N⁺(x) ∩ N⁺(y)
-    # the adjacency's payload is O(|E|) array cells even though it has one
-    # row per src — gate on the edge count, not the row count
-    n_edges = o.count()
-    # cached: BOTH probe sides (au on e.src, av on e.dst) consume this one
-    # frame, and exchange reuse does not collapse the two aliased builds —
-    # uncached, the groupBy(src)+collect_list exchange over the |E|-row
-    # edge frame ran TWICE per action (measured r10: two identical 12.9 MB
-    # exchanges + 2×~5 s of partial collect_list CPU at sf0.1; caching
-    # halves the adjacency cost at every scale, same O(|E|)-longs pin
-    # class as `o` above).
-    adj = bounded_cache(
-        o.groupBy("src").agg(F.collect_list("dst").alias("nbrs"))
-    )
+    # a triangle x<y<z (in (deg, id) order) is found exactly once, at edge
+    # (x→y), as z ∈ N⁺(x) ∩ N⁺(y); the edges are the adjacency exploded
+    # back, not a pin of their own (see the docstring)
     au, av = adj.alias("au"), adj.alias("av")
     tri = (
-        o.select("src", "dst")
+        adj.select("src", F.explode("nbrs").alias("dst"))
         .alias("e")
-        .join(_hint_if_small(au, n_edges), F.col("au.src") == F.col("e.src"))
-        .join(_hint_if_small(av, n_edges), F.col("av.src") == F.col("e.dst"))
+        .join(au, F.col("au.src") == F.col("e.src"))
+        .join(av, F.col("av.src") == F.col("e.dst"))
         .agg(
             F.sum(
                 F.size(F.array_intersect(F.col("au.nbrs"), F.col("av.nbrs")))
@@ -484,6 +463,7 @@ def graph_kcore_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     und = _undirected_copurchase(spark, sf_dir).localCheckpoint(eager=True)
     edges = und  # both directions counted via the union below
+    n_edges = edges.count()
     converged = False
     for _ in range(30):  # safety cap; peel converges in ≪30 rounds in practice
         deg = _degrees(edges)
@@ -496,10 +476,11 @@ def graph_kcore_members(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("u", "v")
             .localCheckpoint(eager=True)
         )
-        if pruned.count() == edges.count():
+        n_pruned = pruned.count()
+        if n_pruned == n_edges:
             converged = True
             break
-        edges = pruned
+        edges, n_edges = pruned, n_pruned
     if not converged:
         # an unconverged peel is NOT a k-core (sub-k nodes survive) —
         # failing loudly beats silently returning a wrong subgraph

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wordcount_spark.operators.relational import dec, stable_round_sql
+from wordcount_spark.operators.relational import dec, sort_small, stable_round_sql
 from wordcount_spark.registry import register
 from wordcount_spark.sources.readers import load_table
 from wordcount_spark.operators.caching import bounded_cache, bounded_checkpoint
@@ -1587,7 +1587,7 @@ def text_heavyhitters_twopass(spark: SparkSession, sf_dir: str) -> DataFrame:
     separate total count — profiled as the worst scale_check outlier);
     pass 2's groupBy is map-side combined to O(P×|candidates|) partials,
     and the 1-row total fans out via a broadcast nested-loop
-    (allowlisted).
+    (allowlisted). The ≤100-row result sorts in one task (``sort_small``).
     """
     from wordcount_spark.operators.sketches import misra_gries_summary_arrays
 
@@ -1607,20 +1607,19 @@ def text_heavyhitters_twopass(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed O(P×256) summary, not the stream): without the hint
     # Catalyst plans a SortMergeJoin that shuffles the full token stream
     # against the tiny candidate set — the exact shuffle this operator
-    # exists to avoid (caught in the r4 profile). Over the cap (unbounded
-    # P at extreme scale) the engine's shuffle join is the right call.
+    # exists to avoid (caught in the r4 profile). AQE's runtime broadcast
+    # conversion cannot stand in: it re-plans only after the stream side's
+    # exchange has run. Over the cap (unbounded P at extreme scale) the
+    # engine's shuffle join is the right call.
     n_cand = cand.count()
     cand_b = F.broadcast(cand) if n_cand <= 1_000_000 else cand
     counts = toks.join(cand_b, "tok", "left_semi").groupBy("tok").agg(
         F.count("*").alias("cnt")
     )
     total = summ.agg(F.sum("part_total").alias("n"))
-    return (
-        counts.crossJoin(total)
-        .filter(F.col("cnt") >= F.expr("n div 100"))
-        .select("tok", "cnt")
-        .orderBy(F.desc("cnt"), "tok")
-    )
+    # φ = 1% admits at most 100 tokens: an O(groups) result
+    hh = counts.crossJoin(total).filter(F.col("cnt") >= F.expr("n div 100"))
+    return sort_small(hh.select("tok", "cnt"), F.desc("cnt"), "tok")
 
 
 @register(

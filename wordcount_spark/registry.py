@@ -229,6 +229,12 @@ EVIDENCE_RESET: dict[str, int] = {
     "events_gapfill_hourly": 14,
     "pipeline_pretrain_full": 14,
     "mix_rebalance_to_min": 14,
+    # r15: the triangle count's joins are AQE's choice (no count-gated
+    # hints, edges exploded from the adjacency pin); the heavy-hitter and
+    # degree-histogram results sort in one task (same oracles)
+    "graph_triangle_count": 15,
+    "graph_degree_distribution": 15,
+    "text_heavyhitters_twopass": 15,
 }
 
 

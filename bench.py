@@ -6,17 +6,20 @@ Timing = build the query, then run it to a noop sink (materializes every
 row, avoids driver-side collect overhead dominating — the reference's own
 published numbers were 99.6% stdout I/O, a pathology we explicitly do not
 reproduce; see BASELINE.md): best-of-3 wall time per query, plus the
-executor CPU of the kept run (summed on the line as ``cpu_s``).
+executor CPU of the kept run (summed on the line as ``cpu_s``). Then the
+CLI's word count on a generated reference-shaped corpus gives
+``synthetic_corpus_mb_per_sec``. Each query's whole stage record and the
+corpus figures go to the ``BENCH_detail.json`` sidecar.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import sys
 import time
 from functools import partial
+from pathlib import Path
 
 _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if _REPO_ROOT not in sys.path:
@@ -54,11 +57,11 @@ HEADLINE = [
 ]
 
 
-#: pre-run 1-min load above this marks the emitted JSON "noisy": a busy
-#: neighbor inflates wall-clock up to ~2x (VERDICT r3: a pre-run load of
-#: 8.57 inflated every r3 query ~1.2-1.4x). The flag is informational:
-#: nothing waits or retries on it.
-NOISE_LOAD_1M = 4.0
+#: reference-shaped corpus for the MB/s figure: PAPER.md's 29 files,
+#: 2,658,525 words and 57,467 distinct, drawn by ``perfbench.gen.corpus``
+#: from seed 1 — synthetic bytes, labelled so on the line
+CORPUS_SPEC = {"n_tokens": 2_658_525, "vocab": 57_467, "files": 29}
+CORPUS_SEED = 1
 
 
 def timed(build, n: int, status) -> tuple[float, dict]:
@@ -67,7 +70,11 @@ def timed(build, n: int, status) -> tuple[float, dict]:
     plan construction, file listing and any eager build-time jobs are
     part of the measured work. Returns the best wall time and the stage
     figures of that run (executor CPU, shuffle, spill, ...), read from
-    ``status`` (a ``perfbench.probe.StatusReader``) around it."""
+    ``status`` (a ``perfbench.probe.StatusReader``) around it.
+
+    One warm run does not take the first query of a fresh session off
+    the JVM's JIT slope: its executor CPU can read 2-3x its settled
+    figure, so per-query deltas of a session's first point are noise."""
     build().write.format("noop").mode("overwrite").save()
     runs = []
     for _ in range(n):
@@ -79,194 +86,50 @@ def timed(build, n: int, status) -> tuple[float, dict]:
     return min(runs, key=lambda r: r[0])
 
 
-def _materialize_8x_corpus(paths: list[str], scratch: str) -> list[str]:
-    """Build a corpus of 8x DISTINCT bytes from the reference corpus:
-    the original files plus 7 deterministic variants, each with A-Z/a-z
-    Caesar-rotated by k — byte count and whitespace structure preserved,
-    but every variant contributes a disjoint vocabulary, so the shuffle
-    and aggregate state scale with the bytes (ADVICE r1 / VERDICT r2
-    item 5: the old 8x run listed the same paths 8 times, which kept the
-    vocabulary 1x and flattered the reduce stage; that caveat no longer
-    applies and is gone from the emitted JSON). Generated once and
-    reused; regeneration is keyed on a per-source-file (path, size,
-    mtime) manifest — NOT the aggregate byte count, which Caesar
-    rotation preserves and which therefore could not detect a content
-    change or coincidentally-sized leftovers (ADVICE r3 item 1)."""
-    import string
-
-    os.makedirs(scratch, exist_ok=True)
-    out_paths = list(paths)
-    tables = []
-    for k in range(1, 8):
-        lower = string.ascii_lowercase
-        upper = string.ascii_uppercase
-        rot_l = lower[k:] + lower[:k]
-        rot_u = upper[k:] + upper[:k]
-        tables.append(bytes.maketrans(
-            (lower + upper).encode(), (rot_l + rot_u).encode()
-        ))
-    manifest_path = os.path.join(scratch, "manifest.json")
-    want = {
-        "sources": [
-            [p, os.path.getsize(p), int(os.path.getmtime(p))] for p in paths
-        ],
-        "variants": 7,
-    }
-    have = [
-        os.path.join(scratch, f)
-        for f in sorted(os.listdir(scratch))
-        if f.endswith(".txt")
-    ]
-    try:
-        with open(manifest_path) as f:
-            got = json.load(f)
-    except (OSError, ValueError):
-        got = None
-    if got != want or len(have) != 7 * len(paths):
-        for p in have:
-            os.remove(p)
-        have = []
-        for k, table in enumerate(tables, start=1):
-            for p in paths:
-                data = open(p, "rb").read().translate(table)
-                dst = os.path.join(
-                    scratch, f"rot{k}_{os.path.basename(p)}.txt"
-                )
-                with open(dst, "wb") as f:
-                    f.write(data)
-                have.append(dst)
-        with open(manifest_path, "w") as f:
-            json.dump(want, f)
-    return out_paths + have
-
-
-#: hard byte budget for the final stdout JSON line. The driver captures
-#: only the last ~2000 bytes of stdout and json-parses the final line;
-#: round 4's line grew past that window and the official bench artifact
-#: landed with "parsed": null (VERDICT r4 item 1). 1800 leaves headroom
-#: for the trailing newline and any stray runtime warning bytes.
+#: byte budget for the final stdout JSON line: its consumer keeps only
+#: the last ~2000 bytes of stdout and parses the final line. The line's keys
+#: are fixed (``HEADLINE`` is 25 names), so it is checked by a test, not
+#: trimmed at run time.
 LINE_BUDGET = 1800
 
-#: sidecar (committed) holding the full diagnostic detail that round 4
-#: used to put on the stdout line: per-query executor CPU, corpus
-#: stage breakdowns. Nothing is lost — it just no
-#: longer competes with the headline line for the driver's tail buffer.
+#: committed sidecar with the full record: each headline query's stage
+#: figures and the corpus phase's spec, bytes, wall and executor CPU
 DETAIL_SIDECAR = os.path.join(_REPO_ROOT, "BENCH_detail.json")
 
 
 def _emit_final_line(out: dict, detail: dict) -> None:
-    """Write the full record to the sidecar, then print a compact
-    headline JSON as the LAST stdout line, mechanically enforcing
-    LINE_BUDGET: optional fields are shed (never ``queries`` — the
-    per-query timings ARE the round-over-round signal) until the line
-    fits, and the shed keys remain readable in the sidecar."""
+    """Write the full record to the sidecar, then print the compact
+    headline JSON as the LAST stdout line."""
     with open(DETAIL_SIDECAR, "w") as f:
         json.dump({**out, "detail": detail}, f, indent=1, sort_keys=True)
-    line = json.dumps(out, separators=(",", ":"))
-    # shed order: throughput diagnostics ONLY — "noisy" and its load stamp
-    # are the run-validity flags (~25 bytes combined) and are UN-SHEDDABLE
-    # (ADVICE r5: shedding them would let a consumer of the headline line
-    # read a noisy run as clean); spec-required fields never shed either
-    for key in ("reference_corpus_8x_mb_per_sec", "reference_corpus_mb_per_sec"):
-        if len(line) <= LINE_BUDGET:
-            break
-        out.pop(key, None)
-        line = json.dumps(out, separators=(",", ":"))
-    if len(line) > LINE_BUDGET:  # still over: queries list itself grew —
-        # keep the slowest 25 (signal-bearing) and note the truncation
-        top = dict(sorted(out["queries"].items(), key=lambda kv: -kv[1])[:25])
-        out["queries"] = top
-        out["queries_truncated"] = True
-        line = json.dumps(out, separators=(",", ":"))
-    print(line)
+    print(json.dumps(out, separators=(",", ":")))
 
 
-def _corpus_phase(spark, status, paths: list[str], out: dict, detail: dict) -> None:
-    """Apples-to-apples vs the reference's ONE compute-derived number: its
-    read+map stage ran at ~47.6 MB/s on 4 cores over raw_text_input
-    (BASELINE.md). Same input, same work (tokenize+normalize+count)."""
-    from pyspark.sql import functions as F
-
-    from wordcount_spark.operators.wordcount import words_from_text
+def _corpus_phase(spark, status, out: dict, detail: dict) -> None:
+    """The shipped CLI count (``count_words`` over ``load_text_corpus``)
+    on the generated reference-shaped corpus, under the session's own
+    config: the figure to set beside the reference's 47.6 MB/s read+map
+    stage on 4 threads (BASELINE.md)."""
+    from perfbench.gen import CorpusSpec, corpus
+    from wordcount_spark.operators.wordcount import count_words
     from wordcount_spark.sources.readers import load_text_corpus
 
-    nbytes = sum(os.path.getsize(p) for p in paths)
-    # Micro-benchmark confs (restored after): text is line-splittable,
-    # so size scan splits ~ total/parallelism — the default 128 MB
-    # leaves the 3.3 MB largest file as ONE task that serializes the
-    # normalize stage. AQE off + few reducers: on a sub-second job AQE's
-    # per-stage re-optimization is pure latency and the word vocabulary
-    # needs no 32-way reduce; both stay ON for the sf-scale headline
-    # queries, where they earn their keep.
-    saved = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.files.maxPartitionBytes",
-            "spark.sql.adaptive.enabled",
-            "spark.sql.shuffle.partitions",
-        )
+    cache = Path(_REPO_ROOT) / ".bench_scratch" / "corpus"
+    c = corpus(CorpusSpec(**CORPUS_SPEC), CORPUS_SEED, cache)
+    wall, stages = timed(lambda: count_words(load_text_corpus(spark, c.files)), 3, status)
+    out["synthetic_corpus_mb_per_sec"] = round(c.n_bytes / 1e6 / wall, 2)
+    detail["synthetic_corpus"] = {
+        "spec": CORPUS_SPEC,
+        "seed": CORPUS_SEED,
+        "bytes": c.n_bytes,
+        "wall_s": round(wall, 4),
+        "executor_cpu_s": round(stages["executor_cpu_s"], 4),
     }
-
-    def split_for(total: int) -> str:
-        per_core = total // max(spark.sparkContext.defaultParallelism, 1)
-        return str(min(max(per_core, 256 * 1024), 128 * 1024 * 1024))
-
-    spark.conf.set("spark.sql.files.maxPartitionBytes", split_for(nbytes))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        # Same WORK as the reference's read+map stage: tokenize, then
-        # normalize EVERY token, then count — the single-aggregation
-        # formulation (the reference's process_word also runs per
-        # token, not per distinct word). The flagship `wordcount`
-        # query instead uses vocabulary pre-aggregation — normalize
-        # O(vocab) — which wins at corpus scale but pays a second
-        # exchange that dominates on a 15 MB input.
-        def wc_df(path_list):
-            return (
-                words_from_text(
-                    load_text_corpus(spark, path_list), "text", mode="head"
-                )
-                .groupBy("word")
-                .agg(F.count("*").alias("cnt"))
-            )
-
-        # a 0.4 s job: best-of-8 is cheap at this size
-        best, _ = timed(lambda: wc_df(paths), 8, status)
-        out["reference_corpus_mb_per_sec"] = round(nbytes / 1e6 / best, 2)
-        # Committed stage breakdown (VERDICT r1 task 5): how much of
-        # the single-stream time is fixed per-job cost that vanishes
-        # at scale vs. actual tokenize/normalize/count compute.
-        empty, _ = timed(lambda: spark.range(1), 2, status)
-        scan, _ = timed(lambda: spark.read.text(paths), 2, status)
-        detail["reference_corpus_breakdown_sec"] = {
-            "total": round(best, 4),
-            "empty_job_floor": round(empty, 4),
-            "scan_only": round(scan, 4),
-        }
-        # same pipeline at 8x the corpus: the amortization point where
-        # per-job fixed costs stop dominating. The 8x input is DISTINCT
-        # bytes (original + 7 Caesar-rotated variants, disjoint
-        # vocabularies), so scan, shuffle AND aggregate state all scale
-        # with the input (VERDICT r2 item 5).
-        paths8 = _materialize_8x_corpus(
-            paths, os.path.join(_REPO_ROOT, ".bench_scratch", "corpus8x")
-        )
-        nbytes8 = sum(os.path.getsize(p) for p in paths8)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", split_for(nbytes8))
-        best8, _ = timed(lambda: wc_df(paths8), 4, status)
-        out["reference_corpus_8x_mb_per_sec"] = round(nbytes8 / 1e6 / best8, 2)
-        detail["reference_corpus_8x_distinct_bytes"] = nbytes8
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-    # EXTERNAL load, sampled before our JVM spins up
-    prerun_load = os.getloadavg()[0]
 
     from perfbench.probe import StatusReader
     from wordcount_spark.registry import get_queries
@@ -276,15 +139,13 @@ def main() -> None:
     status = StatusReader(spark)
     queries = get_queries()
 
-    # best-of-3 wall; the kept run's executor CPU sits next to it
+    # best-of-3 wall; the kept run's whole stage record goes to the sidecar
     timings: dict[str, float] = {}
-    cpu: dict[str, float] = {}
+    stages: dict[str, dict] = {}
     for name in HEADLINE:
-        if name not in queries:
-            continue
-        wall, stages = timed(partial(queries[name], spark, sf_dir), 3, status)
+        wall, record = timed(partial(queries[name], spark, sf_dir), 3, status)
         timings[name] = round(wall, 4)
-        cpu[name] = round(stages["executor_cpu_s"], 4)
+        stages[name] = {k: round(v, 4) for k, v in record.items()}
 
     out = {
         "metric": "headline_queries_total",
@@ -292,25 +153,10 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        "cpu_s": round(sum(cpu.values()), 4),
-        "host_load_avg_1m_prerun": round(prerun_load, 2),
-        "noisy": prerun_load > NOISE_LOAD_1M,
+        "cpu_s": round(sum(r["executor_cpu_s"] for r in stages.values()), 4),
     }
-    # Everything that is diagnostic-only goes to the SIDECAR, never the
-    # stdout line: the driver captures only the last ~2000 bytes of
-    # stdout and parses the final line as JSON (round 4's line outgrew
-    # that window: BENCH_r04.json "parsed": null).
-    detail = {"executor_cpu_s": cpu}
-
-    corpus = os.environ.get("SPARK_GRAFT_CORPUS", "/root/reference/raw_text_input")
-    paths = sorted(glob.glob(os.path.join(corpus, "*")))
-    if paths:
-        _corpus_phase(spark, status, paths, out, detail)
-    else:
-        print(f"bench: reference corpus absent at {corpus}; "
-              "no MB/s figures", file=sys.stderr)
-        detail["reference_corpus"] = f"absent: {corpus}"
-
+    detail = {"stages": stages}
+    _corpus_phase(spark, status, out, detail)
     _emit_final_line(out, detail)
     spark.stop()
 

@@ -2,10 +2,11 @@
 json-parses the FINAL line; round 4's line outgrew that window and the
 official artifact landed with "parsed": null (VERDICT r4 item 1). These
 tests pin the emission contract without running Spark: the final line
-must parse, carry the spec-required keys, and fit LINE_BUDGET even with
-a realistically large query set; diagnostics must land in the sidecar.
-The timing helper's warm-plus-best-of-n loop is pinned the same way,
-with a stub frame and a stub status reader.
+must parse, carry the spec-required keys, and fit LINE_BUDGET with the
+25 headline queries; each query's stage record and the corpus phase's
+figures must land in the sidecar. The timing helper's warm-plus-best-of-n
+loop and the corpus phase are pinned the same way, with stub frames and
+a stub status reader.
 """
 
 from __future__ import annotations
@@ -14,17 +15,20 @@ import io
 import json
 import os
 import sys
+from types import SimpleNamespace
 
 import bench
 
 
-def _emit(out, detail, tmp_path):
+def _capture(tmp_path, run):
+    """Run ``run()`` with the sidecar redirected into ``tmp_path``; return
+    its stdout and the sidecar path."""
     sidecar = tmp_path / "BENCH_detail.json"
     old_sidecar, old_stdout = bench.DETAIL_SIDECAR, sys.stdout
     bench.DETAIL_SIDECAR = str(sidecar)
     sys.stdout = io.StringIO()
     try:
-        bench._emit_final_line(out, detail)
+        run()
         captured = sys.stdout.getvalue()
     finally:
         bench.DETAIL_SIDECAR = old_sidecar
@@ -32,72 +36,37 @@ def _emit(out, detail, tmp_path):
     return captured, sidecar
 
 
-def _r4_shaped_out():
-    # 25 headline queries with realistic name lengths + values
-    queries = {name: round(0.3 + i * 0.017, 4) for i, name in enumerate(bench.HEADLINE)}
+def _shaped_out():
+    # the 25 headline queries with realistic values
+    queries = {name: round(10.3 + i * 0.017, 4) for i, name in enumerate(bench.HEADLINE)}
     return {
         "metric": "headline_queries_total",
         "value": round(sum(queries.values()), 4),
         "unit": "sec",
         "queries": queries,
         "sf": 0.1,
-        "cpu_s": 21.4837,
-        "host_load_avg_1m_prerun": 3.83,
-        "noisy": False,
-        "reference_corpus_mb_per_sec": 36.16,
-        "reference_corpus_8x_mb_per_sec": 54.57,
-    }
-
-
-def _r4_shaped_detail():
-    return {
-        "executor_cpu_s": {name: 0.8593 for name in bench.HEADLINE},
-        "reference_corpus_breakdown_sec": {
-            "total": 0.4242, "empty_job_floor": 0.0165, "scan_only": 0.0731,
-        },
-        "reference_corpus_8x_distinct_bytes": 122712176,
+        "cpu_s": 123.4837,
+        "synthetic_corpus_mb_per_sec": 113.16,
     }
 
 
 def test_final_line_fits_driver_tail_buffer(tmp_path):
-    captured, sidecar = _emit(_r4_shaped_out(), _r4_shaped_detail(), tmp_path)
+    detail = {"stages": {name: {"executor_cpu_s": 0.8593} for name in bench.HEADLINE}}
+    captured, sidecar = _capture(
+        tmp_path, lambda: bench._emit_final_line(_shaped_out(), detail)
+    )
     lines = [ln for ln in captured.splitlines() if ln.strip()]
     final = lines[-1]
     assert len(final) <= bench.LINE_BUDGET
     parsed = json.loads(final)
-    # spec-required keys survive intact
-    for key in ("metric", "value", "unit", "queries", "sf", "cpu_s"):
-        assert key in parsed, key
-    assert len(parsed["queries"]) == len(bench.HEADLINE)
+    assert set(parsed) == {
+        "metric", "value", "unit", "queries", "sf", "cpu_s",
+        "synthetic_corpus_mb_per_sec",
+    }
+    assert list(parsed["queries"]) == bench.HEADLINE
     # full diagnostics live in the committed sidecar
     side = json.loads(sidecar.read_text())
-    assert set(side["detail"]["executor_cpu_s"]) == set(bench.HEADLINE)
-
-
-def test_oversized_payload_sheds_diagnostics_not_queries(tmp_path):
-    out = _r4_shaped_out()
-    # simulate a future 80-query headline list: the budget must hold by
-    # shedding optional fields first, then trimming to the slowest 25
-    out["queries"] = {
-        f"very_long_query_name_for_budget_stress_{i:03d}": 0.1 + i * 0.01
-        for i in range(80)
-    }
-    captured, sidecar = _emit(out, _r4_shaped_detail(), tmp_path)
-    final = [ln for ln in captured.splitlines() if ln.strip()][-1]
-    assert len(final) <= bench.LINE_BUDGET
-    parsed = json.loads(final)
-    assert parsed["queries"], "queries must never be shed entirely"
-    # run-validity flags are UN-SHEDDABLE (ADVICE r5): a consumer parsing
-    # only the headline line must never read a noisy run as clean
-    assert "noisy" in parsed
-    assert "host_load_avg_1m_prerun" in parsed
-    if parsed.get("queries_truncated"):
-        # the kept subset is the slowest (signal-bearing) tail
-        kept = set(parsed["queries"])
-        assert all(int(k.rsplit("_", 1)[1]) >= 55 for k in kept)
-    # the sidecar always holds the full pre-shed record
-    side = json.loads(sidecar.read_text())
-    assert len(side["queries"]) >= 25
+    assert set(side["detail"]["stages"]) == set(bench.HEADLINE)
 
 
 def test_committed_bench_detail_sidecar_parses():
@@ -106,37 +75,6 @@ def test_committed_bench_detail_sidecar_parses():
     if os.path.exists(bench.DETAIL_SIDECAR):
         side = json.load(open(bench.DETAIL_SIDECAR))
         assert side["metric"] == "headline_queries_total"
-
-
-def test_8x_corpus_manifest_invalidation(tmp_path):
-    """The 8x bench corpus regenerates on SOURCE change and reuses
-    otherwise (r4 keyed the cache on total bytes, which Caesar rotation
-    preserves — a content change could silently reuse stale variants;
-    the fix keys on a per-file (path, size, mtime) manifest)."""
-    src = tmp_path / "src.txt"
-    src.write_text("hello world\n" * 10)
-    scratch = str(tmp_path / "scratch")
-
-    out1 = bench._materialize_8x_corpus([str(src)], scratch)
-    assert len(out1) == 8  # original + 7 rotated variants
-    variants = sorted(p for p in out1 if p.startswith(scratch))
-    stamps1 = {p: os.path.getmtime(p) for p in variants}
-
-    # unchanged source -> reuse (no rewrite)
-    out2 = bench._materialize_8x_corpus([str(src)], scratch)
-    assert sorted(p for p in out2 if p.startswith(scratch)) == variants
-    assert {p: os.path.getmtime(p) for p in variants} == stamps1
-
-    # content change (same byte count, bumped mtime) -> regenerate
-    import time as _t
-    _t.sleep(1.1)  # mtime granularity
-    src.write_text("jelly xorld\n" * 10)
-    out3 = bench._materialize_8x_corpus([str(src)], scratch)
-    new_variants = sorted(p for p in out3 if p.startswith(scratch))
-    assert {p: os.path.getmtime(p) for p in new_variants} != stamps1
-    # and the rotated bytes actually reflect the new content
-    assert b"jelly" not in open(new_variants[0], "rb").read()  # rotated away
-    assert open(new_variants[0], "rb").read() != b""
 
 
 class _Sink:
@@ -199,3 +137,116 @@ def test_timed_rebuilds_inside_every_run(monkeypatch):
     assert status.marks == 3  # the warm run is not measured
     assert wall == 0.25 + 1.5
     assert stages == {"executor_cpu_s": 2.0, "shuffle_write_mb": 20.0, "spill_mb": 0.0}
+
+
+#: every figure ``StatusReader.stages_since`` sums
+_STAGE_KEYS = ("jobs", "count", "tasks", "executor_run_s", "executor_cpu_s", "gc_s",
+               "input_mb", "shuffle_write_mb", "shuffle_read_mb", "spill_mb")
+
+
+class _RecordStatus(_Status):
+    def stages_since(self, mark):
+        return {k: mark["job"] + i / 10 for i, k in enumerate(_STAGE_KEYS)}
+
+
+class _Session:
+    stopped = False
+
+    def stop(self):
+        self.stopped = True
+
+
+def test_sidecar_carries_each_headline_stage_record(monkeypatch, tmp_path):
+    """main() writes the kept run's whole stage record of every headline
+    query to the sidecar, and sums their executor CPU into ``cpu_s``."""
+    import perfbench.probe
+    import wordcount_spark.registry
+    import wordcount_spark.session
+
+    clock = [0.0]
+    monkeypatch.setattr(bench.time, "monotonic", lambda: clock[0])
+    session, status = _Session(), _RecordStatus()
+    built = []
+
+    def query(name):
+        def build(spark, sf_dir):
+            assert (spark, sf_dir) == (session, "/data/sf0.1")
+            built.append(name)
+
+            class _Frame:  # every run takes 1 s: the first timed run is kept
+                write = _Sink(clock, [1.0])
+            return _Frame()
+        return build
+
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/data/sf0.1")
+    monkeypatch.setattr(wordcount_spark.session, "get_spark", lambda app: session)
+    monkeypatch.setattr(perfbench.probe, "StatusReader", lambda spark: status)
+    monkeypatch.setattr(
+        wordcount_spark.registry, "get_queries",
+        lambda: {name: query(name) for name in bench.HEADLINE},
+    )
+    monkeypatch.setattr(
+        bench, "_corpus_phase",
+        lambda spark, st, out, detail: out.update(synthetic_corpus_mb_per_sec=1.0),
+    )
+    captured, sidecar = _capture(tmp_path, bench.main)
+
+    assert built == [name for name in bench.HEADLINE for _ in range(4)]
+    assert session.stopped
+    side = json.loads(sidecar.read_text())
+    stages = side["detail"]["stages"]
+    assert list(stages) == sorted(bench.HEADLINE)
+    for i, name in enumerate(bench.HEADLINE):
+        first_timed_mark = 3 * i + 1  # three marks per query
+        assert stages[name] == {
+            k: round(first_timed_mark + j / 10, 4) for j, k in enumerate(_STAGE_KEYS)
+        }
+    line = json.loads(captured.splitlines()[-1])
+    assert line["cpu_s"] == round(sum(s["executor_cpu_s"] for s in stages.values()), 4)
+    assert line["queries"] == {name: 1.0 for name in bench.HEADLINE}
+
+
+def test_corpus_phase_times_shipped_count(monkeypatch):
+    """The corpus phase times the CLI's ``count_words(load_text_corpus(...))``
+    over the generated files inside ``timed``, and reports bytes / wall as
+    MB/s with the kept run's executor CPU beside it in the sidecar."""
+    import perfbench.gen
+    import wordcount_spark.operators.wordcount
+    import wordcount_spark.sources.readers
+
+    clock = [0.0]
+    monkeypatch.setattr(bench.time, "monotonic", lambda: clock[0])
+    sink = _Sink(clock, [9.0, 3.0, 1.5, 2.0])  # warm, then the kept 1.5 s run
+    session, files, calls = object(), ["part-00.txt", "part-01.txt"], []
+
+    def corpus(spec, seed, cache_root):
+        calls.append(("corpus", spec, seed, cache_root))
+        return SimpleNamespace(files=files, n_bytes=12_000_000)
+
+    def load_text_corpus(spark, paths):
+        calls.append(("load", spark, paths))
+        return "lines"
+
+    def count_words(df):
+        calls.append(("count", df))
+
+        class _Frame:
+            write = sink
+        return _Frame()
+
+    monkeypatch.setattr(perfbench.gen, "corpus", corpus)
+    monkeypatch.setattr(wordcount_spark.sources.readers, "load_text_corpus", load_text_corpus)
+    monkeypatch.setattr(wordcount_spark.operators.wordcount, "count_words", count_words)
+    out, detail = {}, {}
+    bench._corpus_phase(session, _Status(), out, detail)
+
+    (_, spec, seed, root), *runs = calls
+    assert spec == perfbench.gen.CorpusSpec(n_tokens=2_658_525, vocab=57_467, files=29)
+    assert seed == 1 and root.parts[-2:] == (".bench_scratch", "corpus")
+    assert runs == [("load", session, files), ("count", "lines")] * 4
+    assert sink.walls == []
+    assert out == {"synthetic_corpus_mb_per_sec": 8.0}  # 12 MB / 1.5 s
+    assert detail == {"synthetic_corpus": {
+        "spec": bench.CORPUS_SPEC, "seed": 1, "bytes": 12_000_000,
+        "wall_s": 1.5, "executor_cpu_s": 2.0,
+    }}

@@ -337,7 +337,8 @@ def test_streaming_doc_quality_dedup_equals_batch(spark, sf_dir):
     must equal the same pipeline run as a batch over the full corpus."""
     from pyspark.sql import functions as F
 
-    from wordcount_spark.operators.queries_textstats import STOPWORDS, _toks
+    from wordcount_spark.functions.text import tokenize
+    from wordcount_spark.operators.queries_textstats import STOPWORDS
     from wordcount_spark.streaming.streams import (
         run_to_completion,
         streaming_doc_quality_dedup,
@@ -351,7 +352,7 @@ def test_streaming_doc_quality_dedup_equals_batch(spark, sf_dir):
     }
 
     docs = spark.read.option("pathGlobFilter", "documents.parquet").parquet(sf_dir)
-    toks = _toks()
+    toks = tokenize("text")
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     m = docs.select(
         "lang",

@@ -49,12 +49,12 @@ def test_chunk_windows_cover_every_token(spark):
     bad_stride = chunks.where(F.col("start_tok") != F.col("chunk_idx") * CHUNK_S)
     assert bad_stride.count() == 0
     # the last chunk of each doc reaches the final token: max(start+size) == n
-    from wordcount_spark.operators.queries_textstats import _toks
+    from wordcount_spark.functions.text import tokenize
     from wordcount_spark.sources.readers import load_table
 
     n_by_doc = (
         load_table(spark, SF_DIR, "documents")
-        .select("doc_id", F.size(_toks()).alias("n"))
+        .select("doc_id", F.size(tokenize("text")).alias("n"))
         .where("n > 0")
     )
     covered = chunks.groupBy("doc_id").agg(
@@ -233,14 +233,15 @@ def test_pack_sequences_invariants(spark):
     """Packing must conserve tokens: (a) each doc's fragments sum to its
     token count, (b) every sequence except the last is exactly full,
     (c) fragments tile each sequence with no gaps or overlaps."""
-    from wordcount_spark.operators.queries_llmprep import PACK_C, _toks
+    from wordcount_spark.functions.text import tokenize
+    from wordcount_spark.operators.queries_llmprep import PACK_C
 
     frags = bounded_cache(get_queries()["llm_pack_sequences"](spark, SF_DIR))
 
     from wordcount_spark.sources.readers import load_table
 
     docs = load_table(spark, SF_DIR, "documents").select(
-        "doc_id", F.size(_toks()).alias("n_tok")
+        "doc_id", F.size(tokenize("text")).alias("n_tok")
     ).where(F.col("n_tok") > 0)
     per_doc = frags.groupBy("doc_id").agg(F.sum("n_toks").alias("got"))
     bad = docs.join(per_doc, "doc_id", "full").where(

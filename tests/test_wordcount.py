@@ -5,7 +5,6 @@ from __future__ import annotations
 
 from wordcount_spark.functions.text import normalize_word_sql
 from wordcount_spark.operators.wordcount import (
-    format_reference_output,
     ranked_word_count,
     word_count,
     word_count_totals,
@@ -65,13 +64,6 @@ def test_ranked_output_is_sorted_and_contiguous(spark, sf_dir):
     words = [r["word"] for r in ranked]
     assert idxs == list(range(len(ranked)))  # 0-based contiguous [i]
     assert words == sorted(words)  # byte-order ascending (UTF8_BINARY)
-
-
-def test_reference_output_format(spark, sf_dir):
-    ranked = ranked_word_count(spark, sf_dir)
-    lines = format_reference_output(ranked.limit(3), "documents.parquet")
-    assert lines[0] == "Filename: documents.parquet"
-    assert lines[1].startswith("[0] ")
 
 
 def test_words_from_text_preserves_columns(spark):

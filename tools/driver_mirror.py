@@ -86,7 +86,7 @@ def main():
 
     queries = get_queries()
     oracles = get_oracles()
-    spark = get_spark("driver_mirror", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = get_spark("driver_mirror")
 
     # calibrate against the NEWEST driver round on disk (r01 today; later
     # rounds supersede it automatically)

@@ -87,6 +87,12 @@ def tokenize(col: Column | str) -> Column:
     return F.filter(F.split(col, TOKEN_SPLIT_RE), lambda t: t != F.lit(""))
 
 
+#: DuckDB-SQL rendering of ``tokenize``'s split of ``text`` (C++
+#: ``operator>>`` whitespace); the oracles drop its empty strings with
+#: ``list_filter(..., x -> x <> '')``.
+TOKS_SQL = "regexp_split_to_array(text, '[ \t\n\x0b\f\r]+')"
+
+
 def normalize_word_sql(expr: str, mode: str = "head") -> str:
     """DuckDB-SQL rendering of ``normalize_word`` for the oracle.
 

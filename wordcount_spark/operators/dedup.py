@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from wordcount_spark.functions.text import tokenize
 from wordcount_spark.operators.caching import bounded_cache
 
 # Mersenne prime 2^31 - 1: modulus for the affine minhash family. 31 bits
@@ -46,7 +47,7 @@ def shingle_array(text_col: str, n: int = 3) -> Column:
     eval and measured 6x slower on the documents table; zip_with pads the
     shorter side with null, concat propagates the null, and the final slice
     drops the null tail, so outputs are bit-identical."""
-    toks = F.filter(F.split(F.lower(text_col), r"\s+"), lambda t: t != F.lit(""))
+    toks = tokenize(F.lower(text_col))
     sz = F.size(toks)
     sh = toks
     for k in range(1, n):
@@ -184,7 +185,7 @@ def minhash_signatures_arr(
     hashes = F.transform(shingle_array(text_col), lambda s: base_hash(s, hash_mode))
     init = F.array_repeat(F.lit(_P).cast("long"), num_hashes)
     sig = F.aggregate(hashes, init, step)
-    toks = F.filter(F.split(F.lower(text_col), r"\s+"), lambda t: t != F.lit(""))
+    toks = tokenize(F.lower(text_col))
     # pre-filter shingle-less docs on the cheap token count (filtering on
     # the signature would re-evaluate the whole hash fold in the predicate)
     return df.filter(F.size(toks) >= 3).select(
@@ -304,7 +305,7 @@ def simhash(
     bounded by vocabulary, not document length).
     """
     nbits = 64 if hash_mode == "xxhash64" else 60
-    toks = F.filter(F.split(F.lower(text_col), r"\s+"), lambda t: t != F.lit(""))
+    toks = tokenize(F.lower(text_col))
     h = base_hash(F.col("tok"), hash_mode, fold=False)
     tok_weights = (
         df.select(F.col(id_col).alias("id"), F.explode(toks).alias("tok"))
@@ -356,9 +357,7 @@ def doc_shingle_hashes(
     collisions, while negligible ~|shingles|²/2P per doc, make it a
     different function than hash(concat) — both engines compute the SAME
     function, collisions included)."""
-    toks = F.filter(
-        F.split(F.lower(text_col), r"\s+"), lambda t: t != F.lit("")
-    )
+    toks = tokenize(F.lower(text_col))
     th = F.transform(toks, lambda t: (F.xxhash64(t) % _P + _P) % _P)
     sz = F.size(th)
     combined = th

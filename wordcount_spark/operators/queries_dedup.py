@@ -19,6 +19,7 @@ from wordcount_spark.operators.dedup import (
     shingle_array,
     simhash,
 )
+from wordcount_spark.functions.text import TOKS_SQL, tokenize
 from wordcount_spark.registry import register
 from wordcount_spark.sources.readers import load_table
 from wordcount_spark.operators.caching import bounded_cache
@@ -499,7 +500,7 @@ def _register_pipeline_curation():
         whole pipeline — not just its pieces — is differentially checked.
         """
         docs = load_table(spark, sf_dir, "documents")
-        toks = F.filter(F.split("text", r"\s+"), lambda x: x != F.lit(""))
+        toks = tokenize("text")
         stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
         m = docs.select(
             "doc_id",
@@ -778,9 +779,7 @@ def _register_pipeline_rag():
     64-dim norm SQL shared with the similarity module."""
     from wordcount_spark.operators.queries_llmprep import CHUNK_S
     from wordcount_spark.operators.queries_similarity import _NORM_SQL
-    from wordcount_spark.operators.queries_textstats import _TOKS_SQL, _toks
 
-    tok_sql = _TOKS_SQL
     oracle = f"""
     WITH survivors AS (
       SELECT doc_id, text FROM (
@@ -789,7 +788,7 @@ def _register_pipeline_rag():
         FROM documents) t WHERE rn = 1
     ),
     toks AS (
-      SELECT doc_id, list_filter({tok_sql}, x -> x <> '') AS tk
+      SELECT doc_id, list_filter({TOKS_SQL}, x -> x <> '') AS tk
       FROM survivors
     ),
     chunks AS (
@@ -867,7 +866,7 @@ def _register_pipeline_rag():
             .agg(F.min("doc_id").alias("doc_id"))
             .select("doc_id")
         )
-        toks = docs.select("doc_id", _toks().alias("toks"))
+        toks = docs.select("doc_id", tokenize("text").alias("toks"))
         chunks = chunk_windows(toks).groupBy("doc_id").agg(
             F.count("*").alias("n_chunks")
         )
@@ -959,14 +958,13 @@ def dedup_cluster_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from wordcount_spark.operators.components import connected_components_star
-    from wordcount_spark.operators.queries_textstats import _toks
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = jaccard_pairs(doc_shingles(docs), 0.5).select("ida", "idb")
     labels = connected_components_star(pairs).select(
         F.col("id").alias("doc_id"), "component"
     )
-    dl = docs.select("doc_id", F.size(_toks()).alias("n_tokens"))
+    dl = docs.select("doc_id", F.size(tokenize("text")).alias("n_tokens"))
     labeled = dl.join(labels, "doc_id", "left").select(
         "doc_id",
         F.coalesce("component", "doc_id").alias("component"),
@@ -1307,7 +1305,7 @@ def text_line_dedup_c4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", r"\s+"), lambda t: t != F.lit(""))
+    toks = tokenize("text")
     w = _LINE_W
     nl = F.floor((F.size(toks) + F.lit(w - 1)) / F.lit(w)).cast("long")
     lines = (

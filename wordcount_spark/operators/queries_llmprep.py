@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wordcount_spark.operators.queries_textstats import _TOKS_SQL, _toks
+from wordcount_spark.functions.text import TOKS_SQL, tokenize
 from wordcount_spark.registry import register
 from wordcount_spark.sources.readers import load_table
 from wordcount_spark.operators.caching import bounded_cache, bounded_checkpoint
@@ -71,7 +71,7 @@ def chunk_windows(toks_df: DataFrame) -> DataFrame:
     "text_chunk_windows",
     f"""
     WITH t AS (
-      SELECT doc_id, list_filter({_TOKS_SQL}, x -> x <> '') AS toks
+      SELECT doc_id, list_filter({TOKS_SQL}, x -> x <> '') AS toks
       FROM documents
     ),
     c AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) > 0)
@@ -100,7 +100,7 @@ def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     return chunk_windows(
-        docs.select("doc_id", _toks().alias("toks"))
+        docs.select("doc_id", tokenize("text").alias("toks"))
     ).orderBy("doc_id", "chunk_idx")
 
 
@@ -180,7 +180,7 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     "chunk_dedup_overlap",
     f"""
     WITH t AS (
-      SELECT doc_id, list_filter({_TOKS_SQL}, x -> x <> '') AS toks
+      SELECT doc_id, list_filter({TOKS_SQL}, x -> x <> '') AS toks
       FROM documents
     ),
     base AS (SELECT doc_id, toks FROM t WHERE len(toks) > 0),
@@ -221,7 +221,7 @@ def chunk_dedup_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     owner-count join-back is chunk-count sized. Same pattern at 100 TB —
     this is exact-match on 16-byte hashes, never text comparison."""
     docs = load_table(spark, sf_dir, "documents")
-    base = docs.select("doc_id", _toks().alias("toks")).where(F.size("toks") > 0)
+    base = docs.select("doc_id", tokenize("text").alias("toks")).where(F.size("toks") > 0)
     exc = base.where(F.col("doc_id") % 7 == 0).select(
         (F.col("doc_id") + 100000).alias("doc_id"),
         F.slice(
@@ -346,7 +346,7 @@ def _pretrain_quality_docs(docs: DataFrame) -> DataFrame:
     return docs.select(
         "doc_id",
         "lang",
-        _toks().alias("toks"),
+        tokenize("text").alias("toks"),
         F.unhex(F.md5("text")).alias("text_md5"),
     ).where(F.size("toks") >= 20)
 
@@ -377,7 +377,7 @@ def pretrain_survivor_ids_plan(q: DataFrame) -> DataFrame:
     f"""
     WITH t AS (
       SELECT doc_id, lang,
-             list_filter({_TOKS_SQL}, x -> x <> '') AS toks,
+             list_filter({TOKS_SQL}, x -> x <> '') AS toks,
              unhex(md5(text)) AS text_md5
       FROM documents
     ),
@@ -753,7 +753,7 @@ PACK_C = 512
 _PACK_SQL = f"""
     WITH d AS (
       SELECT doc_id,
-             len(list_filter({_TOKS_SQL}, x -> x <> '')) AS n_tok
+             len(list_filter({TOKS_SQL}, x -> x <> '')) AS n_tok
       FROM documents
     ),
     spans AS (
@@ -784,7 +784,7 @@ def pack_fragments(docs: DataFrame) -> DataFrame:
     from pyspark.sql import Window
 
     spark = docs.sparkSession
-    d = docs.select("doc_id", F.size(_toks()).alias("n_tok")).where(
+    d = docs.select("doc_id", F.size(tokenize("text")).alias("n_tok")).where(
         F.col("n_tok") > 0
     )
     npart = spark.sparkContext.defaultParallelism
@@ -1108,7 +1108,7 @@ BUDGET_FRAC = 0.6  # token budget as a fraction of the corpus total
     LEFT JOIN lvl l ON TRUE
     LEFT JOIN level lv ON TRUE
     ORDER BY o.source
-    """.format(toks=_TOKS_SQL),
+    """.format(toks=TOKS_SQL),
 )
 def mix_token_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Water-filling token-budget allocation across sources: given a
@@ -1133,7 +1133,7 @@ def mix_token_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     per_source = docs.groupBy("source").agg(
-        F.sum(F.size(_toks())).cast("long").alias("n")
+        F.sum(F.size(tokenize("text"))).cast("long").alias("n")
     )
     # O(sources) frame from here on
     per_source = bounded_cache(per_source)
@@ -1192,7 +1192,7 @@ def _register_dsir():
 
     oracle = f"""
     WITH toks AS (
-      SELECT doc_id, lang, unnest(list_filter({_TOKS_SQL}, x -> x <> '')) AS tok
+      SELECT doc_id, lang, unnest(list_filter({TOKS_SQL}, x -> x <> '')) AS tok
       FROM documents
     ),
     src AS (SELECT tok, count(*) AS c_s FROM toks GROUP BY tok),
@@ -1252,7 +1252,7 @@ def _register_dsir():
         via the LEFT JOIN's coalesce, exactly as in the SQL."""
         docs = load_table(spark, sf_dir, "documents")
         toks = docs.select(
-            "doc_id", "lang", F.explode(_toks()).alias("tok")
+            "doc_id", "lang", F.explode(tokenize("text")).alias("tok")
         )
         # cached: source counts, target counts, and the scoring join all
         # derive from this exploded frame
@@ -1316,7 +1316,7 @@ _register_dsir()
     f"""
     WITH t AS (
       SELECT doc_id, lang,
-             list_filter({_TOKS_SQL}, x -> x <> '') AS toks
+             list_filter({TOKS_SQL}, x -> x <> '') AS toks
       FROM documents
     ),
     eligible AS (SELECT * FROM t WHERE len(toks) > 40),
@@ -1356,7 +1356,7 @@ def llm_sft_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row perfectly.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = _toks()
+    toks = tokenize("text")
     eligible = docs.where(F.size(toks) > 40).select("doc_id", "lang", toks.alias("tk"))
     tmpl_prefix = "<|system|>You are a helpful assistant.<|user|>"
     pairs = eligible.select(
@@ -1388,7 +1388,7 @@ def llm_sft_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "llm_preference_pairs",
     f"""
     WITH t AS (
-      SELECT doc_id, lang, list_filter({_TOKS_SQL}, x -> x <> '') AS toks
+      SELECT doc_id, lang, list_filter({TOKS_SQL}, x -> x <> '') AS toks
       FROM documents
     ),
     m AS (
@@ -1423,7 +1423,7 @@ def llm_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rn and rn+1 are co-located) — effectively one exchange end to end.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = _toks()
+    toks = tokenize("text")
     m = docs.where(F.size(toks) > 0).select(
         "doc_id",
         "lang",
@@ -1462,7 +1462,7 @@ def llm_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH t AS (
       SELECT doc_id, lang,
-             list_filter({_TOKS_SQL}, x -> x <> '') AS toks,
+             list_filter({TOKS_SQL}, x -> x <> '') AS toks,
              md5(text) AS h
       FROM documents
     ),
@@ -1507,7 +1507,7 @@ def pipeline_sft_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only; the report is an O(langs) aggregate.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = _toks()
+    toks = tokenize("text")
     t = docs.select(
         "doc_id", "lang", toks.alias("tk"), F.md5("text").alias("h")
     )
@@ -1550,7 +1550,7 @@ def pipeline_sft_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH per_doc AS (
       SELECT source, lang,
-             len(list_filter({_TOKS_SQL}, x -> x <> '')) AS ws,
+             len(list_filter({TOKS_SQL}, x -> x <> '')) AS ws,
              len(regexp_extract_all(text,
                  '''(?:s|t|re|ve|m|ll|d)|[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]+'))
                AS bpe,
@@ -1606,7 +1606,7 @@ def llm_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = docs.select(
         "source",
         "lang",
-        F.size(_toks()).alias("ws"),
+        F.size(tokenize("text")).alias("ws"),
         F.size(F.regexp_extract_all("text", F.lit(_BPE_RE), 0)).alias("bpe"),
         "n_chars",
         F.md5(F.substring("text", 1, 64)).alias("prefix_hash"),

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from wordcount_spark.functions.text import tokenize
 from wordcount_spark.operators.relational import stable_round, stable_round_sql
 from wordcount_spark.registry import register
 from wordcount_spark.sources.readers import load_table
@@ -116,7 +117,7 @@ def _bm25_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         F.explode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != F.lit(""))
+            tokenize(F.lower("text"))
         ).alias("tok"),
     )
     counts = toks.groupBy("doc_id").agg(
@@ -338,7 +339,7 @@ def retrieval_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         F.explode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != F.lit(""))
+            tokenize(F.lower("text"))
         ).alias("term"),
     )
     postings = toks.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
@@ -421,7 +422,7 @@ def retrieval_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     same scan evaluates all phrases in one pass.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", r"\s+"), lambda t: t != F.lit(""))
+    toks = tokenize("text")
     counted = docs.select(
         "doc_id",
         *[
@@ -508,7 +509,7 @@ def eval_bm25_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         F.explode(
-            F.filter(F.split(F.lower("text"), r"\s+"), lambda x: x != F.lit(""))
+            tokenize(F.lower("text"))
         ).alias("tok"),
     ).distinct()
     qdf = F.broadcast(

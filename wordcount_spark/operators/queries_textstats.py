@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wordcount_spark.functions.text import TOKS_SQL, tokenize
 from wordcount_spark.operators.relational import dec, sort_small, stable_round_sql
 from wordcount_spark.registry import register
 from wordcount_spark.sources.readers import load_table
@@ -30,18 +31,11 @@ LANG_LEXICONS: dict[str, list[str]] = {
 #: English-ish stopwords for the quality score
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it", "for", "on"]
 
-_TOKS_SQL = "regexp_split_to_array(text, '[ \t\n\x0b\f\r]+')"
-
-
-def _toks(col: str = "text") -> F.Column:
-    return F.filter(F.split(col, r"\s+"), lambda t: t != F.lit(""))
-
-
 @register(
     "text_token_stats",
     f"""
     WITH t AS (
-      SELECT doc_id, list_filter({_TOKS_SQL}, x -> x <> '') AS toks, n_chars
+      SELECT doc_id, list_filter({TOKS_SQL}, x -> x <> '') AS toks, n_chars
       FROM documents
     )
     SELECT doc_id,
@@ -60,7 +54,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     no token explode, no shuffle but the output sort.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = _toks()
+    toks = tokenize("text")
     return (
         docs.select(
             "doc_id",
@@ -79,7 +73,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH t AS (
       SELECT doc_id, text,
-             list_filter({_TOKS_SQL}, x -> x <> '') AS toks
+             list_filter({TOKS_SQL}, x -> x <> '') AS toks
       FROM documents
     ),
     m AS (
@@ -111,7 +105,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage (cf. pipeline_curation, pipeline_pretrain_full).
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = _toks()
+    toks = tokenize("text")
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     m = docs.select(
         "doc_id",
@@ -154,7 +148,7 @@ def _lang_score_sql(lang: str) -> str:
     f"""
     WITH t AS (
       SELECT doc_id, lang AS true_lang,
-             list_filter({_TOKS_SQL}, x -> x <> '') AS toks
+             list_filter({TOKS_SQL}, x -> x <> '') AS toks
       FROM documents
     ),
     s AS (
@@ -184,7 +178,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle but the output sort.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = _toks()
+    toks = tokenize("text")
     t = docs.select("doc_id", F.col("lang").alias("true_lang"), toks.alias("toks"))
     def lex_hits(lex: list[str]) -> F.Column:
         arr = F.array(*[F.lit(w) for w in lex])
@@ -246,7 +240,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_tfidf_top_terms",
     f"""
     WITH toks AS (
-      SELECT doc_id, unnest(list_filter({_TOKS_SQL}, x -> x <> '')) AS tok
+      SELECT doc_id, unnest(list_filter({TOKS_SQL}, x -> x <> '')) AS tok
       FROM documents
     ),
     tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY doc_id, tok),
@@ -270,7 +264,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     relative to the corpus), and the per-doc top-k window; N is a
     one-row aggregate broadcast onto the scores, so the build runs no job."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.explode(_toks()).alias("tok"))
+    toks = docs.select("doc_id", F.explode(tokenize("text")).alias("tok"))
     # (doc, term) grain — Zipf-compressed vs the raw token stream; pinned
     # because both the df derivation and the scoring join consume it
     tf = bounded_cache(toks.groupBy("doc_id", "tok").agg(F.count("*").alias("tf")))
@@ -326,7 +320,7 @@ def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             "doc_id",
             F.size(F.regexp_extract_all("text", F.lit(_BPE_RE), 0)).alias("n_bpe_tokens"),
-            F.size(_toks()).alias("n_ws_tokens"),
+            F.size(tokenize("text")).alias("n_ws_tokens"),
         )
         .orderBy("doc_id")
     )
@@ -364,7 +358,7 @@ def text_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only, no shuffle but the output sort.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != F.lit(""))
+    toks = tokenize(F.lower("text"))
     hs = F.transform(
         toks, lambda s: F.conv(F.substring(F.md5(s), 1, 7), 16, 10).cast("long")
     )
@@ -459,7 +453,7 @@ def lateral_token_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~tokens/doc. 1-based pos matches DuckDB's generate_subscripts."""
     docs = load_table(spark, sf_dir, "documents")
     e = docs.select(
-        "doc_id", F.posexplode(_toks()).alias("pos0", "tok")
+        "doc_id", F.posexplode(tokenize("text")).alias("pos0", "tok")
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "tok")
     return (
         e.where(F.col("pos") <= 3)
@@ -546,7 +540,7 @@ def json_map_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_token_freq_by_lang",
     f"""
     WITH t AS (
-      SELECT lang, unnest(list_filter({_TOKS_SQL}, x -> x <> '')) AS tok
+      SELECT lang, unnest(list_filter({TOKS_SQL}, x -> x <> '')) AS tok
       FROM documents
     )
     SELECT lang, tok, count(*) AS cnt
@@ -564,7 +558,7 @@ def text_token_freq_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     return (
-        docs.select("lang", F.explode(_toks()).alias("tok"))
+        docs.select("lang", F.explode(tokenize("text")).alias("tok"))
         .groupBy("lang", "tok")
         .agg(F.count("*").alias("cnt"))
         .orderBy("lang", F.desc("cnt"), "tok")
@@ -576,7 +570,7 @@ def text_token_freq_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH tok AS (
       SELECT doc_id,
-             unnest(list_filter({_TOKS_SQL}, x -> x <> '')) AS tok
+             unnest(list_filter({TOKS_SQL}, x -> x <> '')) AS tok
       FROM documents
     ),
     c AS (SELECT doc_id, tok, count(*) AS c FROM tok GROUP BY doc_id, tok)
@@ -598,7 +592,7 @@ def text_token_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     counts = (
-        docs.select("doc_id", F.explode(_toks()).alias("tok"))
+        docs.select("doc_id", F.explode(tokenize("text")).alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("c"))
     )
@@ -620,7 +614,7 @@ def text_token_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_bigram_top",
     f"""
     WITH t AS (
-      SELECT list_filter({_TOKS_SQL}, x -> x <> '') AS toks FROM documents
+      SELECT list_filter({TOKS_SQL}, x -> x <> '') AS toks FROM documents
     ),
     b AS (
       SELECT unnest(list_transform(range(1, len(toks)),
@@ -639,7 +633,7 @@ def text_bigram_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     would shuffle the exploded corpus twice at 100 TB). The count agg gets
     map-side partials; top-50 is TakeOrdered, never a global sort."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", r"\s+"), lambda t: t != F.lit(""))
+    toks = tokenize("text")
     bigrams = F.zip_with(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
         F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -658,7 +652,7 @@ def text_bigram_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_repetition_filter",
     f"""
     WITH t AS (
-      SELECT doc_id, list_filter({_TOKS_SQL}, x -> x <> '') AS toks
+      SELECT doc_id, list_filter({TOKS_SQL}, x -> x <> '') AS toks
       FROM documents
     ),
     bg AS (
@@ -701,7 +695,7 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-grained token keys. The final join is doc_id-keyed on two frames
     already hash-partitioned by doc_id from their aggs."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = _toks()
+    toks = tokenize("text")
     n = F.size(toks)
     win = F.greatest(n - 1, F.lit(0))
     bigrams = F.zip_with(
@@ -1043,7 +1037,7 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     as in text_unigram_logprob.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(_toks(F.lower("text")).alias("t"))
+    toks = docs.select(tokenize(F.lower("text")).alias("t"))
     uni = toks.select(F.explode("t").alias("w"))
     # Vocab-cardinality session pin, accepted (Zipfian: small); reused as
     # both marginals and for the unigram total
@@ -1192,7 +1186,7 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE -0.0.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", _toks(F.lower("text")).alias("t"))
+    toks = docs.select("doc_id", tokenize(F.lower("text")).alias("t"))
     uni = toks.select(F.explode("t").alias("w"))
     # Vocab-cardinality session pin, accepted (Zipfian: small)
     model1 = bounded_cache(uni.groupBy("w").agg(F.count("*").alias("c")))
@@ -1239,7 +1233,7 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH t AS (
       SELECT doc_id, text,
-             list_filter({_TOKS_SQL}, x -> x <> '') AS toks
+             list_filter({TOKS_SQL}, x -> x <> '') AS toks
       FROM documents
     ),
     m AS (
@@ -1289,7 +1283,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     output sort; composes in front of any dedup stage exactly like the
     heuristic gate in ``pipeline_curation``."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = _toks()
+    toks = tokenize("text")
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     m = docs.select(
         "doc_id",
@@ -1378,7 +1372,7 @@ def _register_gopher_rules():
     oracle = f"""
     WITH t AS (
       SELECT doc_id, lang,
-             list_filter({_TOKS_SQL}, x -> x <> '') AS toks
+             list_filter({TOKS_SQL}, x -> x <> '') AS toks
       FROM documents
     ),
     m AS (
@@ -1430,7 +1424,7 @@ def _register_gopher_rules():
         on short docs). Scale: one map-only pass over the corpus (array
         ops in codegen, no Python, no shuffle except the output sort)."""
         docs = load_table(spark, sf_dir, "documents")
-        toks = _toks()
+        toks = tokenize("text")
         n_tokens = F.size(toks)
         guard = n_tokens == 0
         mean_len = stable_round(
@@ -1592,7 +1586,7 @@ def text_heavyhitters_twopass(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wordcount_spark.operators.sketches import misra_gries_summary_arrays
 
     docs = load_table(spark, sf_dir, "documents")
-    tok_arr = F.filter(F.split(F.lower("text"), r"\s+"), lambda t: t != F.lit(""))
+    tok_arr = tokenize(F.lower("text"))
     toks = docs.select(F.explode(tok_arr).alias("tok"))
     # O(P×capacity) rows materialized once; both branches below read it.
     # Pass 1 crosses the Arrow boundary as token ARRAYS (per-doc rows) —
@@ -1662,7 +1656,7 @@ def text_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     radius w costs w zip-shifts, linear not quadratic. The top-k is a
     sort-limit (TakeOrdered) on the aggregate."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(_toks(F.lower("text")).alias("t"))
+    toks = docs.select(tokenize(F.lower("text")).alias("t"))
 
     def shifted_pairs(d: int):
         # (t[i], t[i+d]) for all valid i — struct array via arrays_zip
@@ -1741,7 +1735,7 @@ def text_heaps_law_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard formulation (within-doc order adds nothing at corpus
     scale)."""
     docs = load_table(spark, sf_dir, "documents")
-    t = docs.select("doc_id", _toks(F.lower("text")).alias("toks"))
+    t = docs.select("doc_id", tokenize(F.lower("text")).alias("toks"))
     nmax = t.agg((F.max("doc_id") + 1).alias("n_docs"))
     per_doc = t.crossJoin(F.broadcast(nmax)).select(
         F.least(F.lit(9), F.expr("doc_id * 10 div n_docs")).alias("decile"),
@@ -1819,7 +1813,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     only. The regression itself is one tiny aggregate."""
     docs = load_table(spark, sf_dir, "documents")
     freq = (
-        docs.select(F.explode(_toks(F.lower("text"))).alias("tok"))
+        docs.select(F.explode(tokenize(F.lower("text"))).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("f"))
     )
@@ -1888,7 +1882,7 @@ def text_feature_hash_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs a consistent, ever-growing broadcast)."""
     docs = load_table(spark, sf_dir, "documents")
     return (
-        docs.select(F.explode(_toks(F.lower("text"))).alias("tok"))
+        docs.select(F.explode(tokenize(F.lower("text"))).alias("tok"))
         .select((_hash64(F.col("tok")) % 64).alias("bucket"), "tok")
         .groupBy("bucket")
         .agg(
@@ -1956,7 +1950,7 @@ def text_tfidf_doc_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wordcount_spark.operators.relational import stable_round
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.explode(_toks(F.lower("text"))).alias("tok"))
+    toks = docs.select("doc_id", F.explode(tokenize(F.lower("text"))).alias("tok"))
     tf = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
     dfreq = (
         tf.groupBy("tok")
@@ -2149,7 +2143,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wordcount_spark.operators.relational import stable_round
 
     docs = load_table(spark, sf_dir, "documents")
-    d = docs.select("doc_id", "source", _toks(F.lower("text")).alias("a"))
+    d = docs.select("doc_id", "source", tokenize(F.lower("text")).alias("a"))
     g = (
         d.filter(F.size("a") >= 3)
         .select(
@@ -2234,7 +2228,7 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = docs.select(
         "lang",
         F.size(F.regexp_extract_all("text", F.lit(_BPE_RE), 0)).alias("bpe"),
-        F.size(_toks()).alias("ws"),
+        F.size(tokenize("text")).alias("ws"),
         "n_chars",
     )
     agg = per_doc.groupBy("lang").agg(

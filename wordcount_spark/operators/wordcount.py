@@ -156,15 +156,3 @@ def word_count_totals(spark: SparkSession, sf_dir: str, mode: str = "head") -> D
         F.count("*").alias("unique_words"),
     )
 
-
-def format_reference_output(ranked: DataFrame, header_file: str) -> list[str]:
-    """Render rows exactly like the reference's stdout sink.
-
-    ``Filename: <argv[1]>`` header then ``[i] word: count`` lines
-    (``omp.cpp:219-223``). Collects to the driver — output-sink only, mirrors
-    the reference's rank-0 gather (``hybrid.cpp:235-267``).
-    """
-    lines = [f"Filename: {header_file}"]
-    for row in ranked.collect():
-        lines.append(f"[{row['rank_idx']}] {row['word']}: {row['cnt']}")
-    return lines

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wordcount_spark.functions.text import tokenize
 from wordcount_spark.operators.wordcount import words_from_text
 
 
@@ -441,10 +442,10 @@ def streaming_doc_quality_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     by distinct-content cardinality, the same state a streaming exact
     dedup keeps. The gate prunes BEFORE state, so garbage never enters.
     tests/test_streaming.py proves stream ≡ batch on replay."""
-    from wordcount_spark.operators.queries_textstats import STOPWORDS, _toks
+    from wordcount_spark.operators.queries_textstats import STOPWORDS
 
     docs = _stream_table(spark, sf_dir, "documents")
-    toks = _toks()
+    toks = tokenize("text")
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     m = docs.select(
         "lang",
@@ -592,7 +593,7 @@ def streaming_line_dedup(
     w = 15
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        toks = F.filter(F.split("text", r"\s+"), lambda t: t != F.lit(""))
+        toks = tokenize("text")
         nl = F.floor((F.size(toks) + F.lit(w - 1)) / F.lit(w)).cast("long")
         lines = batch.where(F.size(toks) > 0).select(
             "doc_id",

@@ -6,12 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from wordcount_spark.plans.explain import formatted_plan
-from wordcount_spark.sources.formats import (
-    delta_available,
-    read_jdbc,
-    read_table,
-    write_table,
-)
+from wordcount_spark.sources.formats import read_jdbc, read_table, write_table
 
 
 @pytest.fixture(scope="module")
@@ -52,34 +47,8 @@ def test_text_sink_roundtrip(spark, docs, tmp_path):
 
 
 def test_connector_stubs_fail_clearly(spark):
-    from wordcount_spark.session import delta_python_available
-
     with pytest.raises(NotImplementedError, match="no JDBC driver"):
         read_jdbc(spark, "jdbc:postgresql://x/y", "t")
-    if not delta_python_available():
-        # no delta-spark in this container: the capability stub must raise
-        assert delta_available(spark) is False
-
-
-def test_delta_merge_roundtrip(spark, tmp_path):
-    """Write → MERGE (update 1 key, insert 1 key) → read back. Runs for
-    real when delta-spark is installed (the session builder probes for it
-    and enables the Delta catalog); cleanly skipped otherwise — the
-    environment-gated path out of the VERDICT r2 item 6 stub."""
-    from wordcount_spark.sources.formats import delta_merge_upsert
-
-    if not delta_available(spark):
-        pytest.skip("delta-spark not installed in this environment")
-    path = str(tmp_path / "delta_tbl")
-    spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20)], ["k", "name", "v"]
-    ).write.format("delta").save(path)
-    updates = spark.createDataFrame(
-        [(2, "b2", 21), (3, "c", 30)], ["k", "name", "v"]
-    )
-    result = delta_merge_upsert(spark, path, updates, "k")
-    rows = {r["k"]: (r["name"], r["v"]) for r in result.collect()}
-    assert rows == {1: ("a", 10), 2: ("b2", 21), 3: ("c", 30)}
 
 
 def test_json_quarantine_splits_bad_records(spark, tmp_path):

@@ -216,19 +216,19 @@ def test_signature_baseline_covers_whole_registry():
     plan was never baselined until someone remembered to rerun
     gen_plan_signatures. Registering a query now FORCES the deliberate
     refreeze: every lazy query needs a `signatures` entry, every eager
-    query an `eager_signatures` entry."""
+    query an `eager_signatures` entry. Deleting one forces it too: an
+    entry naming an unregistered query fails."""
     names = set(_registry())
-    missing_lazy = sorted(
-        (names - SKIP) - set(_BASELINE.get("signatures", {}))
-    )
-    missing_eager = sorted(
-        (names & SKIP) - set(_BASELINE.get("eager_signatures", {}))
-    )
-    assert not missing_lazy and not missing_eager, (
-        f"queries missing from PLAN_SIGNATURES.json (lazy={missing_lazy}, "
-        f"eager={missing_eager}) — run tools/gen_plan_signatures.py "
-        "<round> to baseline them deliberately"
-    )
+    for key, want in (
+        ("signatures", names - SKIP),
+        ("eager_signatures", names & SKIP),
+    ):
+        have = set(_BASELINE.get(key, {}))
+        assert have == want, (
+            f"PLAN_SIGNATURES.json {key} out of step with the registry "
+            f"(missing {sorted(want - have)}, ghost {sorted(have - want)}) — "
+            "run tools/gen_plan_signatures.py <round> to baseline deliberately"
+        )
 
 
 def test_eager_query_final_frame_signature(spark, eager_query):

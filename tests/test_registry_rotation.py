@@ -88,6 +88,25 @@ def test_new_registration_rotates_into_window():
         del registry.ORACLES[dummy]
 
 
+def test_register_rejects_a_duplicate_name():
+    """A second definition under a registered name raises and leaves the
+    first one, its oracle and its eager flag in place — a later module can
+    no longer silently replace an earlier query."""
+    import pytest
+
+    from wordcount_spark import registry
+
+    registry._load_all()
+    fn, oracle = registry.QUERIES["wordcount"], registry.ORACLES["wordcount"]
+    with pytest.raises(ValueError, match="'wordcount' is already registered"):
+        registry.register("wordcount", "SELECT 1 AS x", eager=True)(
+            lambda spark, sf_dir: None
+        )
+    assert registry.QUERIES["wordcount"] is fn
+    assert registry.ORACLES["wordcount"] == oracle
+    assert "wordcount" not in registry.EAGER_QUERIES
+
+
 def test_driver_checked_reads_committed_rounds():
     """The seen-set must reflect the committed rounds (r1/r2 checked 77
     distinct queries) — if the files go missing the rotation degrades to

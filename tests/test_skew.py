@@ -1,6 +1,5 @@
 """Skew handling: AQE must split a pathologically skewed join partition at
-runtime (the 100 TB hot-key scenario), and the salted aggregation must agree
-with the plain one."""
+runtime (the 100 TB hot-key scenario)."""
 
 from __future__ import annotations
 
@@ -39,12 +38,3 @@ def test_aqe_splits_skewed_join(spark):
         for k, v in old.items():
             if v is not None:
                 conf.set(k, v)
-
-
-def test_salted_agg_equals_plain(spark, sf_dir):
-    from wordcount_spark.operators.queries_wordcount import q_wordcount_salted
-    from wordcount_spark.operators.wordcount import word_count
-
-    a = {(r["word"], r["cnt"]) for r in word_count(spark, sf_dir).collect()}
-    b = {(r["word"], r["cnt"]) for r in q_wordcount_salted(spark, sf_dir).collect()}
-    assert a == b

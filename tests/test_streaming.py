@@ -1,14 +1,25 @@
 """Streaming semantics tests: each streaming pipeline must reproduce its
 batch twin's result on a finite replay (the deterministic-replay strategy —
 SURVEY.md §7 risk 4: watermarks aren't DuckDB-checkable, equivalence to the
-oracle-checked batch query is the next-strongest evidence)."""
+oracle-checked batch query is the next-strongest evidence).
+
+A registered streaming twin that reuses its batch twin's oracle is already
+checked on a one-batch replay by test_registry_contract; what it adds is
+the incremental state, so its test here replays the input as several
+micro-batches (``*_slicing``) and its docstring names that test."""
 
 from __future__ import annotations
+
+import os
+import shutil
+import time
+from glob import glob
 
 import pytest
 
 from wordcount_spark.operators.queries_windows import window_tumbling, window_session
 from wordcount_spark.operators.wordcount import word_count
+from wordcount_spark.sources.readers import load_table
 from wordcount_spark.streaming.streams import (
     run_to_completion,
     streaming_session_windows,
@@ -22,13 +33,55 @@ def _rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
-def test_streaming_wordcount_equals_batch(spark, sf_dir):
-    stream = streaming_wordcount(spark, sf_dir)
-    got = run_to_completion(stream, "t_wc", "complete")
-    want = word_count(spark, sf_dir)
-    assert _rows(got, ["word", "count"]) == _rows(
-        want.withColumnRenamed("cnt", "count"), ["word", "count"]
+def _sliced(df, path, n=4):
+    """Write ``df`` as ``n`` round-robin part files: each holds an
+    arbitrary, time-mixed slice, and the file source (one file per
+    trigger) replays them as ``n`` micro-batches."""
+    df.repartition(n).write.parquet(str(path))
+    assert len(glob(f"{path}/part-*.parquet")) == n
+    return str(path)
+
+
+def _time_ordered_slices(spark, ev, tmp_path, n=4):
+    """Write events as ``n`` contiguous (ts, event_id)-sorted slices, one
+    file each, with STRICTLY INCREASING mtimes: the file source orders
+    pending files by modification time, so same-instant part files (one
+    repartitionByRange write) would replay in arbitrary order — not a
+    time-ordered feed at all. Returns the directory; the files match
+    ``slice_*.parquet``."""
+    src = tmp_path / "sliced_events"
+    src.mkdir()
+    pdf = ev.orderBy("ts", "event_id").toPandas()
+    rows = len(pdf)
+    t0 = time.time() - 100
+    for i in range(n):
+        chunk = pdf.iloc[i * rows // n : (i + 1) * rows // n]
+        stage = str(tmp_path / f"stage_{i}")
+        spark.createDataFrame(chunk).coalesce(1).write.parquet(stage)
+        (part,) = glob(f"{stage}/part-*.parquet")
+        dst = f"{src}/slice_{i:02d}.parquet"
+        shutil.move(part, dst)
+        os.utime(dst, (t0 + 10 * i, t0 + 10 * i))
+    return str(src)
+
+
+def test_wordcount_invariant_to_batch_slicing(spark, sf_dir, tmp_path):
+    """Streaming twin of `wordcount`: the complete-mode word → count state
+    must equal the batch count when documents arrive as 4 arbitrary
+    micro-batches, not one — per-batch partial counts merge into the
+    state by addition, so slicing and arrival order cannot matter. (The
+    one-batch replay is checked against the batch oracle by
+    test_registry_contract.)"""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    src = _sliced(docs, tmp_path / "sliced_docs")
+
+    got = run_to_completion(
+        streaming_wordcount(spark, src, path_glob="part-*.parquet"),
+        "t_wc_sliced",
+        "complete",
     )
+    want = word_count(spark, sf_dir).withColumnRenamed("cnt", "count")
+    assert _rows(got, ["word", "count"]) == _rows(want, ["word", "count"])
 
 
 def test_streaming_tumbling_equals_batch(spark, sf_dir):
@@ -40,9 +93,24 @@ def test_streaming_tumbling_equals_batch(spark, sf_dir):
     )
 
 
-def test_streaming_session_equals_batch(spark, sf_dir):
-    stream = streaming_session_windows(spark, sf_dir)
-    got = run_to_completion(stream, "t_sess", "complete")
+def test_session_windows_invariant_to_time_ordered_slicing(
+    spark, sf_dir, tmp_path
+):
+    """Streaming twin of `window_session`: the complete-mode session set
+    must equal the batch sessionization when events arrive as 4
+    time-ordered micro-batches — a session open at a batch boundary is
+    extended or merged by the next batch's events, and no event is late:
+    each batch starts at or after the previous batch's max event time, so
+    above the 1-hour watermark. (The one-batch replay is checked against
+    the batch oracle by test_registry_contract.)"""
+    ev = load_table(spark, sf_dir, "events")
+    src = _time_ordered_slices(spark, ev, tmp_path)
+
+    got = run_to_completion(
+        streaming_session_windows(spark, src, path_glob="slice_*.parquet"),
+        "t_sess_sliced",
+        "complete",
+    )
     want = window_session(spark, sf_dir)
     cols = ["user_id", "session_start", "session_end", "n_events"]
     assert _rows(got, cols) == _rows(want, cols)
@@ -58,7 +126,6 @@ def test_streaming_user_state(spark, sf_dir):
     final = {}
     for r in got.collect():
         final[r["user_id"]] = (r["n_events"], r["last_seen_us"])
-    from wordcount_spark.sources.readers import load_table
     from pyspark.sql import functions as F
 
     ev = load_table(spark, sf_dir, "events")
@@ -95,7 +162,6 @@ def test_stream_stream_interval_join_equals_batch(spark, sf_dir):
         streaming_purchase_attribution(spark, sf_dir), "t_ssj", "append"
     )
     # batch twin: same interval join on the static table
-    from wordcount_spark.sources.readers import load_table
     from pyspark.sql import functions as F
 
     ev = load_table(spark, sf_dir, "events")
@@ -189,7 +255,6 @@ def test_streaming_funnel_transform_with_state(spark, sf_dir):
 
 def test_streaming_static_join_equals_batch(spark, sf_dir):
     """Stream-static enrichment join replayed == the same join in batch."""
-    from wordcount_spark.sources.readers import load_table
     from wordcount_spark.streaming.streams import streaming_enrich_static_join
     from pyspark.sql import functions as F
 
@@ -218,8 +283,6 @@ def test_streaming_checkpoint_resume_exactly_once(spark, sf_dir, tmp_path):
     over a source directory that gained a second file must process ONLY
     the new file (offset tracking), and the final counts must equal batch
     over both files — exactly-once across restarts."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     src = tmp_path / "src"
@@ -284,14 +347,11 @@ def test_incremental_merge_invariant_to_batch_slicing(spark, sf_dir, tmp_path):
     """The foreachBatch CDC merge must converge to the same state whether
     the changelog arrives as ONE batch or as 4 out-of-order micro-batches:
     latest-wins is by (ts, event_id) version, never arrival order."""
-    from wordcount_spark.sources.readers import load_table
     from wordcount_spark.streaming.streams import streaming_incremental_merge
 
-    ev = load_table(spark, sf_dir, "events")
-    src = str(tmp_path / "sliced")
-    # round-robin repartition: each file holds an arbitrary time-mixed
-    # slice, so per-batch maxima disagree with the global ones
-    ev.repartition(4).write.parquet(src)
+    # each slice is time-mixed, so per-batch maxima disagree with the
+    # global ones
+    src = _sliced(load_table(spark, sf_dir, "events"), tmp_path / "sliced")
 
     sliced = streaming_incremental_merge(spark, src, path_glob="part-*.parquet")
     whole = streaming_incremental_merge(spark, sf_dir)
@@ -305,12 +365,10 @@ def test_agg_maintenance_invariant_to_batch_slicing(spark, sf_dir, tmp_path):
     from final state — whether the changelog arrives whole or as 4
     out-of-order micro-batches."""
     from wordcount_spark.operators.queries_cdc import agg_of_state, latest_state
-    from wordcount_spark.sources.readers import load_table
     from wordcount_spark.streaming.streams import streaming_agg_maintenance
 
     ev = load_table(spark, sf_dir, "events")
-    src = str(tmp_path / "sliced")
-    ev.repartition(4).write.parquet(src)
+    src = _sliced(ev, tmp_path / "sliced")
 
     sliced = streaming_agg_maintenance(spark, src, path_glob="part-*.parquet")
     whole = streaming_agg_maintenance(spark, sf_dir)
@@ -388,12 +446,10 @@ def test_lsh_incremental_invariant_to_batch_slicing(spark, sf_dir, tmp_path):
         lsh_candidate_pairs,
         minhash_signatures,
     )
-    from wordcount_spark.sources.readers import load_table
     from wordcount_spark.streaming.streams import streaming_lsh_index_maintenance
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    src = str(tmp_path / "sliced")
-    docs.repartition(4).write.parquet(src)
+    src = _sliced(docs, tmp_path / "sliced")
 
     sliced = streaming_lsh_index_maintenance(spark, src, path_glob="part-*.parquet")
     got = sorted(map(tuple, sliced.collect()))
@@ -410,12 +466,10 @@ def test_line_dedup_invariant_to_batch_slicing(spark, sf_dir, tmp_path):
     arbitrary slices, and that audit must equal the batch
     text_line_dedup_c4 result."""
     from wordcount_spark.operators.queries_dedup import text_line_dedup_c4
-    from wordcount_spark.sources.readers import load_table
     from wordcount_spark.streaming.streams import streaming_line_dedup
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    src = str(tmp_path / "sliced_lines")
-    docs.repartition(4).write.parquet(src)
+    src = _sliced(docs, tmp_path / "sliced_lines")
 
     sliced = streaming_line_dedup(spark, src, path_glob="part-*.parquet")
     got = sorted(map(tuple, sliced.collect()))
@@ -431,35 +485,9 @@ def test_attribution_invariant_to_time_ordered_slicing(spark, sf_dir, tmp_path):
     N's max event time, so every click it can join is still at or above
     the watermark when it arrives. (Arbitrary/unordered slicing is NOT
     covered by that argument: a real feed is time-ordered.)"""
-    from wordcount_spark.sources.readers import load_table
-    from wordcount_spark.streaming.streams import (
-        run_to_completion,
-        streaming_purchase_attribution,
-    )
+    from wordcount_spark.streaming.streams import streaming_purchase_attribution
 
-    import os
-    import shutil
-    import time as time_mod
-    from glob import glob
-
-    ev = load_table(spark, sf_dir, "events")
-    src = str(tmp_path / "sliced_events")
-    os.makedirs(src)
-    # 4 contiguous ts-sorted slices written as separate files with STRICTLY
-    # INCREASING mtimes: the file source orders pending files by
-    # modification time, so same-instant part files (one repartitionByRange
-    # write) replay in arbitrary order — not a time-ordered feed at all
-    pdf = ev.orderBy("ts", "event_id").toPandas()
-    n = len(pdf)
-    t0 = time_mod.time() - 100
-    for i in range(4):
-        chunk = pdf.iloc[i * n // 4 : (i + 1) * n // 4]
-        stage = str(tmp_path / f"stage_{i}")
-        spark.createDataFrame(chunk).coalesce(1).write.parquet(stage)
-        (part,) = glob(f"{stage}/part-*.parquet")
-        dst = f"{src}/slice_{i:02d}.parquet"
-        shutil.move(part, dst)
-        os.utime(dst, (t0 + 10 * i, t0 + 10 * i))
+    src = _time_ordered_slices(spark, load_table(spark, sf_dir, "events"), tmp_path)
 
     sliced = run_to_completion(
         streaming_purchase_attribution(spark, src, path_glob="slice_*.parquet"),

@@ -48,3 +48,19 @@ def test_queries_md_matches_registry():
         f"ghost rows: {sorted(indexed - registered)} "
         f"(run: python tools/gen_query_index.py)"
     )
+
+
+def test_plans_md_matches_lazy_registry():
+    """PLANS.md is generated (``tools/audit_plans.py <sf_dir> --all``): one
+    row per lazy query, and no row for a query that is gone or eager."""
+    from wordcount_spark import registry
+
+    registry._load_all()
+    text = open(os.path.join(REPO, "PLANS.md")).read()
+    rows = set(re.findall(r"^\| ([a-z0-9_]+) \| \d", text, re.M))
+    lazy = set(registry.QUERIES) - registry.EAGER_QUERIES
+    assert rows == lazy, (
+        f"PLANS.md stale — missing rows: {sorted(lazy - rows)}; "
+        f"ghost rows: {sorted(rows - lazy)} "
+        "(run: python tools/audit_plans.py <sf0.1 dir> --all)"
+    )

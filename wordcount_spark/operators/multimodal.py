@@ -2,10 +2,10 @@
 
 Two tiers of decode:
 
-- CODEC formats (JPEG/PNG/FLAC/MP4): PROBE-GATED on Pillow/soundfile
-  (same pattern as the Delta probe): where the libraries exist, the
-  bottom section of this module runs REAL encode→decode round trips with
-  formula oracles and queries_multimodal registers the matching queries;
+- CODEC formats (JPEG/PNG/FLAC/MP4): PROBE-GATED on Pillow/soundfile:
+  where the libraries exist, the bottom section of this module runs REAL
+  encode→decode round trips with formula oracles and queries_multimodal
+  registers the matching queries;
   where they don't — as in this container — ``_decode_real`` raises
   NotImplementedError behind an import-try, nothing registers, and the
   deterministic fake derives features arithmetically from the payload
@@ -814,8 +814,7 @@ def resize_pgm_box2x2(pgm_df: DataFrame) -> DataFrame:
 
 
 # --- Probe-gated REAL codec decodes (Pillow / soundfile) --------------------
-# Mirrors the Delta probe pattern (session.delta_python_available): when the
-# codec library is importable, these stages run REAL encode→decode round
+# When the codec library is importable, these stages run REAL encode→decode round
 # trips with formula oracles on synthetic payloads and the matching queries
 # register (queries_multimodal registers them conditionally); when absent —
 # as in this container — nothing registers and the tests skip cleanly.

@@ -256,55 +256,6 @@ def dedup_minhash_lsh_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DOT = (
-    "list_sum(list_transform(range(1, 65), "
-    "i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))"
-)
-_NRM = "sqrt(list_sum(list_transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-
-
-@register(
-    "dedup_embedding_cosine",
-    f"""
-    SELECT a.vec_id AS ida, b.vec_id AS idb,
-           {_DOT} / ({_NRM.format(v="a.embedding")} * {_NRM.format(v="b.embedding")}) AS cos_sim
-    FROM embeddings a JOIN embeddings b
-      ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE {_DOT} / ({_NRM.format(v="a.embedding")} * {_NRM.format(v="b.embedding")}) > 0.95
-    ORDER BY ida, idb
-    """,
-)
-def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicates (cos > 0.95): semantic dedup, the
-    fuzziest tier — catches paraphrases that no token-level method sees.
-    Label-blocked (IVF-style) so the n² cross product never materializes.
-
-    Scale: label blocking bounds each join bucket; per-pair cosine is a
-    codegen zip_with fold. At 100 TB the blocks come from IVF/LSH
-    bucketing (similarity_ivf_topk / similarity_rp_lsh_buckets) instead
-    of labels — same join shape.
-    """
-    from wordcount_spark.operators.queries_similarity import cosine
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    a, b = emb.alias("a"), emb.alias("b")
-    sim = cosine(F.col("a.embedding"), F.col("b.embedding"))
-    return (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("ida"),
-            F.col("b.vec_id").alias("idb"),
-            sim.alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") > 0.95)
-        .orderBy("ida", "idb")
-    )
-
-
 _SIMHASH_SQL = """
     WITH toks AS (
       SELECT doc_id AS id,

@@ -633,7 +633,7 @@ def multimodal_resize_real_pgm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _register_codec_gated() -> None:
     """Conditionally register the REAL-codec decode queries (VERDICT r3
-    item 4, mirroring the Delta-probe pattern): where Pillow/soundfile
+    item 4): where Pillow/soundfile
     exist these run real encode→decode round trips with formula oracles;
     where they don't — as in this container — nothing registers, QUERIES.md
     doesn't list them, and tests/test_multimodal_codecs.py skips cleanly.

@@ -299,67 +299,6 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q4_order_priority",
-    """
-    SELECT o_orderpriority, count(*) AS order_count
-    FROM orders
-    WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-      AND o_orderdate < TIMESTAMP '1997-01-01'
-      AND EXISTS (SELECT 1 FROM lineitem
-                  WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-    GROUP BY o_orderpriority ORDER BY o_orderpriority
-    """,
-)
-def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: correlated EXISTS with an extra predicate — Catalyst
-    rewrites it to a left-semi join on (orderkey, shipdate>orderdate)."""
-    for t in ("orders", "lineitem"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(
-        """
-        SELECT o_orderpriority, count(*) AS order_count
-        FROM orders
-        WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-          AND o_orderdate < TIMESTAMP '1997-01-01'
-          AND EXISTS (SELECT 1 FROM lineitem
-                      WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-        GROUP BY o_orderpriority ORDER BY o_orderpriority
-        """
-    )
-
-
-@register(
-    "q13_customer_distribution",
-    """
-    WITH co AS (
-      SELECT c_custkey, count(o_orderkey) AS c_count
-      FROM customer LEFT JOIN orders
-        ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-      GROUP BY c_custkey
-    )
-    SELECT c_count, count(*) AS custdist
-    FROM co GROUP BY c_count
-    ORDER BY custdist DESC, c_count DESC
-    """,
-)
-def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape: outer join with a join-time filter, then a second
-    aggregation over the first's result (count-of-counts)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "1-URGENT")
-    co = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        co.groupBy("c_count")
-        .agg(F.count("*").alias("custdist"))
-        .orderBy(F.desc("custdist"), F.desc("c_count"))
-    )
-
-
-@register(
     "join_semi",
     """
     SELECT c_nationkey, count(*) AS n_buyers

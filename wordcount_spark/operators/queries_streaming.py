@@ -2,8 +2,9 @@
 the finite replay's final state is SQL-expressible (complete-mode state ≡
 the batch aggregate; version-ordered merges ≡ the declarative recompute;
 single-batch replay means watermarks drop nothing), so the batch SQL
-checks the whole stream → state pipeline. tests/test_streaming.py
-additionally proves slicing invariance on multi-batch replays."""
+checks the whole stream → state pipeline. A query whose oracle is its
+batch twin's SQL adds only the incremental state, so its docstring names
+the multi-batch replay test in tests/test_streaming.py that pins it."""
 
 from __future__ import annotations
 
@@ -33,7 +34,8 @@ def q_streaming_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship word count as an incremental stream, run to completion over
     the finite test input via a memory sink; the final complete-mode state
     is hash-compared against the BATCH flagship's oracle — the strongest
-    check a streaming op can carry.
+    check a streaming op can carry. The 4-micro-batch replay is
+    tests/test_streaming.py::test_wordcount_invariant_to_batch_slicing.
 
     Scale: complete-mode aggregation state is O(vocab) (Zipf-bounded);
     each micro-batch does the same map-side-combinable count as the
@@ -91,7 +93,8 @@ def _session_oracle() -> str:
 def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked 30-min session windows per user, replayed to completion
     (batch twin `window_session` is the oracle-backed shape; its oracle
-    is reused verbatim here).
+    is reused verbatim here). The 4-micro-batch time-ordered replay is
+    tests/test_streaming.py::test_session_windows_invariant_to_time_ordered_slicing.
 
     Scale: session state is per-user open sessions only; the watermark
     closes and evicts sessions past the horizon. One user-keyed
@@ -131,7 +134,8 @@ def q_streaming_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFr
     """Stream-stream interval join (purchases × prior-hour clicks), both
     sides watermarked so join state stays time-bounded; the accumulated
     append-mode output over the finite replay is hash-compared against
-    the batch interval-join SQL.
+    the batch interval-join SQL. The 4-micro-batch replay is
+    tests/test_streaming.py::test_attribution_invariant_to_time_ordered_slicing.
 
     Scale: the interval condition + watermarks bound both join buffers
     to the hour horizon — without them stream-stream join state grows
@@ -224,7 +228,9 @@ def q_streaming_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame
     into a running latest-per-user state. Unusually for a streaming op the
     FINAL state is exactly SQL-expressible (global latest per key), so
     this one gets the strong oracle, not a rows-only check — the whole
-    stream → merge → state pipeline is differentially verified.
+    stream → merge → state pipeline is differentially verified. The
+    4-micro-batch replay is
+    tests/test_streaming.py::test_incremental_merge_invariant_to_batch_slicing.
 
     Scale: each micro-batch merges O(batch keys) into the state table —
     the per-batch window dedup keys on user_id and the apply is an
@@ -252,7 +258,8 @@ def q_streaming_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event_type aggregate maintained incrementally by foreachBatch
     retract/assert deltas; the batch twin `cdc_incremental_agg`'s SQL is
     reused verbatim as this query's oracle, and the slicing-invariance
-    replay test closes the loop (tests/test_streaming.py).
+    replay closes the loop
+    (tests/test_streaming.py::test_agg_maintenance_invariant_to_batch_slicing).
 
     Scale: deltas are O(touched groups) per micro-batch (event_type
     cardinality), so the maintained table updates in group-sized writes
@@ -318,7 +325,9 @@ def q_streaming_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup candidates maintained as a stream: each
     micro-batch of documents probes the standing banded index, emits the
     pairs it creates, and appends its own band rows to the index
-    (`streaming/streams.py::streaming_lsh_index_maintenance`).
+    (`streaming/streams.py::streaming_lsh_index_maintenance`). The
+    4-micro-batch replay is
+    tests/test_streaming.py::test_lsh_incremental_invariant_to_batch_slicing.
 
     Scale: per batch the probe costs O(|Δ|·bands) rows joined against
     the bucketed index; the index state is the table a production LSH
@@ -344,7 +353,8 @@ def q_streaming_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4 line-level dedup maintained as a stream: foreachBatch merges
     each micro-batch's line hashes into the standing ownership index
     with a min-merge and emits the per-document audit at the end
-    (`streaming/streams.py::streaming_line_dedup`).
+    (`streaming/streams.py::streaming_line_dedup`). The 4-micro-batch
+    replay is tests/test_streaming.py::test_line_dedup_invariant_to_batch_slicing.
 
     Scale: per batch the merge touches O(batch lines) index keys; the
     ownership index is the dedup state a production crawl pipeline

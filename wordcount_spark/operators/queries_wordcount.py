@@ -75,7 +75,9 @@ def q_wordcount_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: same keyed-aggregation shape with the low-cardinality `lang`
     key; language skew (English dominates real corpora) is the 100 TB
-    hazard, covered by AQE skew splitting and the salted variant."""
+    hazard, absorbed by the map-side partial aggregate: each hot key
+    leaves a map task as one row, so no reducer sees more rows for it
+    than there are map partitions."""
     return word_count(spark, sf_dir, group_cols=["lang"])
 
 
@@ -135,26 +137,6 @@ def q_wordcount_ci_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
         # first (nondeterministic) — canonicalize AFTER the collated agg
         .select(F.lower("word_coll").alias("word_ci"), "cnt")
         .orderBy("word_ci")
-    )
-
-
-@register("wordcount_salted", _wc_sql())
-def q_wordcount_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-proof two-phase aggregation: count on (word, salt) first, then
-    sum over salts. On Zipfian text the hot keys ('the', ...) concentrate
-    on single reducers; salting spreads each key over 8 partials. Same
-    oracle as the flagship — the rewrite must be result-identical.
-    (With AQE skew handling this is belt-and-braces; at 100 TB you want
-    both available.)"""
-    docs = load_table(spark, sf_dir, "documents")
-    words = words_from_text(docs.select("text"))
-    salted = (
-        words.withColumn("salt", F.pmod(F.monotonically_increasing_id(), F.lit(8)))
-        .groupBy("word", "salt")
-        .agg(F.count("*").alias("c"))
-    )
-    return (
-        salted.groupBy("word").agg(F.sum("c").alias("cnt")).orderBy("word")
     )
 
 

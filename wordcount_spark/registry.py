@@ -26,9 +26,16 @@ EAGER_QUERIES: set[str] = set()
 
 
 def register(name: str, oracle: str | None = None, eager: bool = False):
-    """Decorator: add a query (and optionally its oracle SQL) to the registry."""
+    """Decorator: add a query (and optionally its oracle SQL) to the registry.
+    A name can be registered once; a second definition raises instead of
+    silently replacing the first."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
+        if name in QUERIES:
+            raise ValueError(
+                f"query {name!r} is already registered in "
+                f"{QUERIES[name].__module__}"
+            )
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
@@ -61,10 +68,7 @@ def _load_all() -> None:
         "queries_retrieval",
         "queries_formats",
     ):
-        try:
-            __import__(f"wordcount_spark.operators.{mod}")
-        except ImportError:
-            pass  # module not built yet (incremental rounds)
+        __import__(f"wordcount_spark.operators.{mod}")
 
 
 #: The external driver samples the FIRST 50 entries of get_queries() for

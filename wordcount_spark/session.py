@@ -26,17 +26,6 @@ import os
 from pyspark.sql import SparkSession
 
 
-def delta_python_available() -> bool:
-    """True when the pip-installable ``delta-spark`` bindings are present
-    (they bundle the maven coordinates for the JVM side). Probed at
-    session build so environments that have Delta get a Delta-enabled
-    catalog with zero code change, and this container (which doesn't)
-    keeps the honest capability stub in sources/formats.py."""
-    import importlib.util
-
-    return importlib.util.find_spec("delta") is not None
-
-
 def get_spark(
     app_name: str = "wordcount_spark",
     cpus: int | None = None,
@@ -68,17 +57,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )
-    if delta_python_available():
-        from delta import configure_spark_with_delta_pip
-
-        builder = configure_spark_with_delta_pip(
-            builder.config(
-                "spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension"
-            ).config(
-                "spark.sql.catalog.spark_catalog",
-                "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-            )
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

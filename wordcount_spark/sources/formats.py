@@ -2,10 +2,9 @@
 text only — this is the lakehouse-grade source/sink surface).
 
 Parquet is the default everywhere (columnar, predicate pushdown, stats).
-CSV/JSON/ORC/text are provided for interchange. Table-format connectors
-(Delta/Iceberg/Hudi) and JDBC need jars/services not present in this
-container — they are stubbed behind capability probes that raise a clear
-error instead of failing deep inside the JVM.
+CSV/JSON/ORC/text are provided for interchange. JDBC reads go through
+a driver-class probe that raises a clear error when the driver jar is
+absent, instead of failing deep inside the JVM.
 """
 
 from __future__ import annotations
@@ -32,60 +31,6 @@ def read_table(spark: SparkSession, path: str, fmt: str = "parquet", schema=None
     if schema is not None:
         r = r.schema(schema)
     return r.format(fmt).load(path)
-
-
-def delta_available(spark: SparkSession) -> bool:
-    """Probe for the Delta Lake connector (needs delta-spark jars)."""
-    try:
-        # py4j attribute access is lazy (returns a JavaPackage for missing
-        # classes) — Class.forName is the real existence check
-        spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
-            "org.apache.spark.sql.delta.DeltaLog"
-        )
-        return True
-    except Exception:
-        return False
-
-
-def read_delta(spark: SparkSession, path: str) -> DataFrame:
-    if not delta_available(spark):
-        raise NotImplementedError(
-            "Delta Lake jars not on the classpath in this environment; "
-            "pip install delta-spark (wordcount_spark.session probes for it "
-            "and enables the Delta catalog automatically)"
-        )
-    return spark.read.format("delta").load(path)
-
-
-def delta_merge_upsert(
-    spark: SparkSession, path: str, updates: DataFrame, key: str
-) -> DataFrame:
-    """MERGE (upsert) a batch of updates into the Delta table at ``path``:
-    matched keys are overwritten, new keys inserted — the ACID latest-wins
-    apply that ``cdc_upsert_latest_state`` computes declaratively, here
-    executed as a table mutation. Requires the delta-spark probe to have
-    fired at session build (see ``wordcount_spark.session``); raises the
-    capability error otherwise.
-
-    Scale: Delta MERGE rewrites only the files whose key ranges match
-    (data skipping on the join keys); the updates side should be the
-    small/incremental batch."""
-    if not delta_available(spark):
-        raise NotImplementedError(
-            "Delta Lake jars not on the classpath in this environment; "
-            "pip install delta-spark to enable MERGE"
-        )
-    from delta.tables import DeltaTable
-
-    target = DeltaTable.forPath(spark, path)
-    (
-        target.alias("t")
-        .merge(updates.alias("u"), f"t.{key} = u.{key}")
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
-    return spark.read.format("delta").load(path)
 
 
 #: JDBC URL scheme → driver class, for drivers that might be on the

@@ -66,10 +66,12 @@ def _events_stream(
     return _normalize_ts(_stream_table(spark, sf_dir, "events", path_glob=path_glob))
 
 
-def streaming_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
+def streaming_wordcount(
+    spark: SparkSession, sf_dir: str, path_glob: str | None = None
+) -> DataFrame:
     """The flagship word count as an incremental stream (complete mode
     hash-agg state: word → count, updated per micro-batch)."""
-    docs = _stream_table(spark, sf_dir, "documents")
+    docs = _stream_table(spark, sf_dir, "documents", path_glob=path_glob)
     return words_from_text(docs.select("text")).groupBy("word").count()
 
 
@@ -91,10 +93,12 @@ def streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+def streaming_session_windows(
+    spark: SparkSession, sf_dir: str, path_glob: str | None = None
+) -> DataFrame:
     """Session windows (30 min gap) per user on the stream — Spark merges
     sessions incrementally as events arrive."""
-    ev = _events_stream(spark, sf_dir)
+    ev = _events_stream(spark, sf_dir, path_glob=path_glob)
     return (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")

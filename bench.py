@@ -38,7 +38,7 @@ HEADLINE = [
     "window_session",
     "events_funnel",
     "asof_join_last_order",
-    "dedup_minhash_lsh_fast",
+    "dedup_minhash_lsh",
     "pipeline_curation",
     "similarity_topk_bruteforce",
     "similarity_multiquery_topk",

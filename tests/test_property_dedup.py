@@ -1,8 +1,8 @@
 """Property-based testing of the dedup primitives: the zip-with-shifted-
-slices shingle expression and the array-fold minhash must agree with
-independent Python models on arbitrary generated texts — the fold/slice
-algebra has off-by-one corners (docs shorter than n, repeated tokens,
-exotic whitespace) that golden fixtures can't enumerate."""
+slices shingle expression and the polynomial shingle-hash combine must
+agree with independent Python models on arbitrary generated texts — the
+slice algebra has off-by-one corners (docs shorter than n, repeated
+tokens, exotic whitespace) that golden fixtures can't enumerate."""
 
 from __future__ import annotations
 
@@ -14,9 +14,8 @@ import pyspark.sql.functions as F
 
 from wordcount_spark.operators.dedup import (
     _P,
-    _affine_params,
     doc_shingle_hashes,
-    minhash_signatures_from_hashes,
+    minhash_signatures,
     shingle_array,
 )
 
@@ -45,28 +44,6 @@ def test_shingle_array_matches_model(spark, texts):
     }
     for i, t in enumerate(texts):
         assert got[i] == model_shingles(t), f"text={t!r}"
-
-
-@settings(max_examples=8, deadline=None)
-@given(st.lists(st.integers(min_value=0, max_value=2**63 - 1), min_size=1, max_size=40))
-def test_affine_fold_is_elementwise_min(spark, raw_hashes):
-    """The signature fold (elementwise-min of affine values) must equal the
-    naive per-hash min — on arbitrary int64 hash inputs, folded in [0, P)."""
-    params = _affine_params(8)
-    hashes = [(h % _P + _P) % _P for h in raw_hashes]
-    expect = [min((a * x + b) % _P for x in hashes) for (a, b) in params]
-
-    df = spark.createDataFrame([(hashes,)], ["hs"])
-
-    def step(acc, x):
-        affines = F.array(*[(x * a + b) % _P for (a, b) in params])
-        return F.zip_with(acc, affines, lambda p, q: F.least(p, q))
-
-    sig = F.aggregate(
-        "hs", F.array_repeat(F.lit(_P).cast("long"), 8), step
-    )
-    got = df.select(sig.alias("sig")).collect()[0].sig
-    assert got == expect
 
 
 def _token_hashes(spark, tokens: set[str]) -> dict[str, int]:
@@ -126,9 +103,7 @@ def test_fast_signatures_equal_for_duplicate_docs(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     sigs = {
         r.id: list(r.signature)
-        for r in minhash_signatures_from_hashes(
-            doc_shingle_hashes(df), num_hashes=16
-        ).collect()
+        for r in minhash_signatures(doc_shingle_hashes(df)).collect()
     }
     assert sigs[1] == sigs[2]
     assert sigs[1] != sigs[3]

@@ -24,7 +24,7 @@ def test_lsh_candidates_cover_high_jaccard_pairs(spark, sf_dir):
     jaccard op scores ≥ 0.7 (collision prob at J=0.7: 1-(1-0.7^4)^8 ≈ 0.90;
     on the test corpus near-dup pairs are far above the S-curve knee)."""
     from wordcount_spark.operators.queries_dedup import (
-        dedup_minhash_lsh_fast,
+        dedup_minhash_lsh,
         dedup_ngram_jaccard,
     )
 
@@ -34,7 +34,7 @@ def test_lsh_candidates_cover_high_jaccard_pairs(spark, sf_dir):
         if r["jaccard"] >= 0.7
     }
     cands = {
-        (r["ida"], r["idb"]) for r in dedup_minhash_lsh_fast(spark, sf_dir).collect()
+        (r["ida"], r["idb"]) for r in dedup_minhash_lsh(spark, sf_dir).collect()
     }
     missed = strong - cands
     assert not missed, f"LSH missed high-similarity pairs: {sorted(missed)[:5]}"

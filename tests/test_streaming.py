@@ -440,12 +440,8 @@ def test_lsh_incremental_invariant_to_batch_slicing(spark, sf_dir, tmp_path):
     """The streaming LSH index maintenance must accumulate the SAME pair
     set whether documents arrive as one batch or as 4 arbitrary slices —
     each pair surfaces exactly when its later member arrives — and that
-    set must equal the full-batch LSH candidate pairs."""
-    from wordcount_spark.operators.dedup import (
-        doc_shingles,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
+    set must equal the registered batch `dedup_minhash_lsh` pairs."""
+    from wordcount_spark.operators.queries_dedup import dedup_minhash_lsh
     from wordcount_spark.streaming.streams import streaming_lsh_index_maintenance
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -454,9 +450,7 @@ def test_lsh_incremental_invariant_to_batch_slicing(spark, sf_dir, tmp_path):
     sliced = streaming_lsh_index_maintenance(spark, src, path_glob="part-*.parquet")
     got = sorted(map(tuple, sliced.collect()))
 
-    sigs = minhash_signatures(doc_shingles(docs), num_hashes=32, hash_mode="md5")
-    batch = lsh_candidate_pairs(sigs, bands=8, rows=4, hash_mode="md5")
-    want = sorted(map(tuple, batch.select("ida", "idb").collect()))
+    want = sorted(map(tuple, dedup_minhash_lsh(spark, sf_dir).collect()))
     assert got == want
 
 

@@ -1,8 +1,9 @@
 """Differential test: the generated DuckDB XXH64 pipeline must reproduce
 Spark's ``xxhash64`` bit-for-bit — empty/short strings, every tail-length
 class (8/4/byte boundaries), ≥32-byte stripe inputs, and multi-byte
-UTF-8. This is the foundation the ``dedup_minhash_lsh_fast`` oracle
-stands on (the EXACT production hash, not a portable stand-in)."""
+UTF-8. This is the foundation every MinHash+LSH oracle stands on
+(``queries_dedup._minhash_sql``: the EXACT production hash, not a
+portable stand-in)."""
 
 from __future__ import annotations
 

@@ -33,6 +33,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
     from bench import HEADLINE
+    from tools.gen_plan_signatures import plan_signature
     from wordcount_spark.plans.explain import formatted_plan
     from wordcount_spark.registry import get_queries
     from wordcount_spark.session import get_spark
@@ -67,15 +68,11 @@ def main() -> None:
     for name in names:
         df = queries[name](spark, sf_dir)
         plan = formatted_plan(df)
-        # count details-section node headers ("(12) Exchange") — the tree
-        # section repeats every node
-        shuffles = len(re.findall(r"^\(\d+\) Exchange\s*$", plan, re.M))
-        bcasts = len(re.findall(r"^\(\d+\) BroadcastExchange\s*$", plan, re.M))
-        pushed = len(re.findall(r"PushedFilters: \[(?!\])", plan))
-        scans = len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M))
+        sig = plan_signature(plan)
         codegen = len(set(re.findall(r"\[codegen id : (\d+)\]", plan)))
         lines.append(
-            f"| {name} | {shuffles} | {bcasts} | {pushed}/{scans} scans | {codegen} |"
+            f"| {name} | {sig['shuffles']} | {sig['broadcasts']} | "
+            f"{sig['pushed']}/{sig['scans']} scans | {codegen} |"
         )
 
     lines += [

@@ -37,8 +37,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 def plan_signature(plan: str) -> dict[str, int]:
     """The plan-shape fields the EVIDENCE_RESET rule cares about: what
-    shuffles, what broadcasts, what reaches the scan. (Same counting
-    regexes as tools/audit_plans.py; codegen spans are excluded — they
+    shuffles, what broadcasts, what reaches the scan. (tools/audit_plans.py
+    counts PLANS.md rows with this too; codegen spans are excluded — they
     don't print under AQE and are a fusion detail, not join/exchange
     semantics.)"""
     return {

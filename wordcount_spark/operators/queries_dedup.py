@@ -1,6 +1,6 @@
 """Registered dedup queries — every tier oracle-backed, including the full
-MinHash+LSH pipeline (portable md5-based hash family, DECIMAL/HUGEINT
-mulmod — see operators/dedup.py)."""
+MinHash+LSH pipeline (xxhash64 token hashes replayed in DuckDB by
+operators/xxh64_sql.py — see operators/dedup.py)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,11 @@ from pyspark.sql import functions as F
 
 from wordcount_spark.operators.dedup import (
     _P,
+    BANDS,
+    NUM_HASHES,
+    ROWS,
     _affine_params,
+    doc_shingle_hashes,
     doc_shingles,
     exact_dedup_keepers,
     hamming_distance,
@@ -123,80 +127,30 @@ _LSH_FINAL_ALL = """
     ORDER BY ida, idb
 """
 
-#: probe side restricted to the delta batch (id % 10 = 0); pair order
-#: normalized because a delta-delta pair meets twice
-_LSH_FINAL_INCREMENTAL = """
-    SELECT DISTINCT least(a.id, b.id) AS ida, greatest(a.id, b.id) AS idb
-    FROM banded a JOIN banded b
-      ON a.band = b.band AND a.bucket = b.bucket AND a.id <> b.id
-    WHERE a.id % 10 = 0
-    ORDER BY ida, idb
-"""
 
-
-def _minhash_sql(
-    num_hashes: int, bands: int, rows: int, final: str = _LSH_FINAL_ALL
-) -> str:
-    """DuckDB rendering of the md5-mode MinHash+LSH candidate pipeline."""
-    params = _affine_params(num_hashes)
-    values = ", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(params))
-    return f"""
-    WITH sh AS ({_SHINGLES_SQL}),
-    x AS (SELECT id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT % {_P} AS x FROM sh),
-    params(i, a, b) AS (SELECT * FROM (VALUES {values})),
-    m AS (
-      SELECT id, i, min((a * x + b) % {_P}) AS h
-      FROM x CROSS JOIN params GROUP BY id, i
-    ),
-    sig AS (
-      SELECT id, list(h ORDER BY i) AS sig FROM m GROUP BY id
-    ),
-    banded AS (
-      SELECT id, band,
-             md5(array_to_string(sig[band*{rows}+1:band*{rows}+{rows}], ',')) AS bucket
-      FROM sig CROSS JOIN (SELECT unnest(range({bands})) AS band)
-    )
-    {final}
-    """
-
-
-@register("dedup_minhash_lsh", _minhash_sql(32, 8, 4))
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash(32) + LSH(8 bands × 4 rows) candidate pairs, portable-hash
-    mode so DuckDB reproduces the signatures bit-for-bit.
-
-    Scale shape: O(n·K) signature computation (one map-side-combinable
-    aggregation), then a groupBy-sized bucket join — the sub-quadratic
-    near-dup path for 100 TB corpora.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signatures(doc_shingles(docs), num_hashes=32, hash_mode="md5")
-    return lsh_candidate_pairs(sigs, bands=8, rows=4, hash_mode="md5").orderBy(
-        "ida", "idb"
-    )
-
-
-def _minhash_fast_sql(num_hashes: int = 32, bands: int = 8, rows: int = 4) -> str:
-    """DuckDB rendering of the PRODUCTION (xxhash64) MinHash+LSH pipeline:
-    the generated XXH64 pipeline (operators/xxh64_sql.py — Spark's exact
-    hash, validated byte-for-byte in tests/test_xxh64_sql.py) hashes each
-    DISTINCT token once, per-doc hash arrays rebuild positionally, and the
-    trigram polynomial combine / affine minhash / banding replay the Spark
-    side exactly. Buckets group on the band's VALUE slice rather than
-    Spark's murmur bucket hash — identical pair semantics up to a ~2^-32
-    murmur collision that would also be a (documented) false candidate on
-    the Spark side."""
+def _minhash_sql(docs: str = "documents", final: str = _LSH_FINAL_ALL) -> str:
+    """DuckDB rendering of the MinHash+LSH pipeline over ``docs`` (a
+    relation with ``doc_id`` and ``text``), ending in ``final``: a SELECT,
+    or further CTEs and a SELECT, over the ``sh`` (id, x), ``sig`` and
+    ``banded`` CTEs. The generated XXH64 pipeline (operators/xxh64_sql.py
+    — Spark's exact hash, validated byte-for-byte in
+    tests/test_xxh64_sql.py) hashes each DISTINCT token once, per-doc hash
+    arrays rebuild positionally, and the trigram polynomial combine /
+    affine minhash / banding replay `dedup.doc_shingle_hashes`,
+    `dedup.minhash_signatures` and `dedup.lsh_banded_index` exactly.
+    Buckets group on the band's VALUE slice rather than Spark's murmur
+    bucket hash — identical pair semantics up to a ~2^-32 murmur collision
+    that would also be a (documented) false candidate on the Spark side."""
     from wordcount_spark.operators.xxh64_sql import xxh64_pipeline_sql
 
-    params = _affine_params(num_hashes)
-    values = ", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(params))
+    values = ", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(_affine_params()))
     vh = xxh64_pipeline_sql("SELECT DISTINCT tok FROM pos")
     return f"""
     WITH t AS (
       SELECT doc_id,
              list_filter(regexp_split_to_array(lower(text), '[ \t\n\x0b\f\r]+'),
                          x -> x <> '') AS toks
-      FROM documents
+      FROM {docs}
     ),
     pos AS (
       SELECT doc_id, unnest(toks) AS tok, generate_subscripts(toks, 1) AS pos
@@ -226,34 +180,29 @@ def _minhash_fast_sql(num_hashes: int = 32, bands: int = 8, rows: int = 4) -> st
     sig AS (SELECT id, list(h ORDER BY i) AS sig FROM m GROUP BY id),
     banded AS (
       SELECT id, band,
-             array_to_string(sig[band*{rows}+1:band*{rows}+{rows}], ',') AS bucket
-      FROM sig CROSS JOIN (SELECT unnest(range({bands})) AS band)
+             array_to_string(sig[band*{ROWS}+1:band*{ROWS}+{ROWS}], ',') AS bucket
+      FROM sig CROSS JOIN (SELECT unnest(range({BANDS})) AS band)
     )
-    {_LSH_FINAL_ALL}
+    {final}
     """
 
 
-@register("dedup_minhash_lsh_fast", _minhash_fast_sql())
-def dedup_minhash_lsh_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production-path MinHash+LSH: tokens hashed ONCE (xxhash64), trigram
-    shingle hashes formed by polynomial combination — shingle strings are
-    never materialized (~30% cheaper than hash(concat), more at larger n).
-    Same signature family, banding, and pair semantics as the oracle-backed
-    md5 variant; benched as the scale path. STRONG oracle (upgraded from
-    rows-only in r4): DuckDB reproduces Spark's xxhash64 bit-for-bit via
-    the generated pipeline in operators/xxh64_sql.py, so the EXACT
-    production signatures — not a portable stand-in — are differentially
-    checked end to end."""
-    from wordcount_spark.operators.dedup import (
-        doc_shingle_hashes,
-        minhash_signatures_from_hashes,
-    )
+@register("dedup_minhash_lsh", _minhash_sql())
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash(32) + LSH(8 bands × 4 rows) candidate pairs. Tokens are
+    hashed ONCE (xxhash64) and trigram shingle hashes formed by
+    polynomial combination, so shingle strings are never materialized.
+    DuckDB reproduces Spark's xxhash64 bit-for-bit via the generated
+    pipeline in operators/xxh64_sql.py, so the exact signatures are
+    differentially checked end to end.
 
+    Scale shape: O(n·K) signature computation (one map-side-combinable
+    aggregation), then a groupBy-sized bucket join — the sub-quadratic
+    near-dup path for 100 TB corpora.
+    """
     docs = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signatures_from_hashes(doc_shingle_hashes(docs), num_hashes=32)
-    return lsh_candidate_pairs(sigs, bands=8, rows=4, hash_mode="xxhash64").orderBy(
-        "ida", "idb"
-    )
+    sigs = minhash_signatures(doc_shingle_hashes(docs))
+    return lsh_candidate_pairs(sigs).orderBy("ida", "idb")
 
 
 _SIMHASH_SQL = """
@@ -284,7 +233,7 @@ _SIMHASH_SQL = """
     _SIMHASH_SQL + "SELECT id, simhash FROM fp ORDER BY id",
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """60-bit SimHash fingerprints (portable-hash mode — DuckDB reproduces
+    """60-bit SimHash fingerprints (md5 token hashes — DuckDB reproduces
     every fingerprint bit-for-bit).
 
     Scale: fingerprinting is a map-only fold over each doc's token
@@ -292,7 +241,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output sort.
     """
     docs = load_table(spark, sf_dir, "documents")
-    return simhash(docs, hash_mode="md5").orderBy("id")
+    return simhash(docs).orderBy("id")
 
 
 @register(
@@ -323,7 +272,7 @@ def dedup_simhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     the n^2 all-pairs product never materializes.
     """
     docs = load_table(spark, sf_dir, "documents")
-    fp = simhash(docs, hash_mode="md5")
+    fp = simhash(docs)
     banded = fp.select(
         "id",
         "simhash",
@@ -394,31 +343,7 @@ _CURATION_SQL = (
 ) + """
     keepers AS (SELECT min(doc_id) AS doc_id FROM kept GROUP BY md5(text)),
     k AS (SELECT kept.* FROM kept JOIN keepers ON kept.doc_id = keepers.doc_id),
-    sh AS (
-      SELECT doc_id AS id,
-             unnest(list_distinct(
-               CASE WHEN len(toks) >= 3
-                    THEN list_transform(range(1, len(toks) - 1),
-                                        i -> array_to_string(toks[i:i+2], ' '))
-                    ELSE [] END)) AS shingle
-      FROM (SELECT doc_id,
-                   list_filter(regexp_split_to_array(lower(text), '[ \t\n\x0b\f\r]+'),
-                               x -> x <> '') AS toks
-            FROM k)
-    ),
-    x AS (SELECT id, ('0x' || substr(md5(shingle), 1, 15))::BIGINT % 2147483647 AS x FROM sh),
-    params(i, a, b) AS (SELECT * FROM (VALUES (0, 1373158607, 239081663), (1, 53710185, 1592467581), (2, 590620972, 525901256), (3, 479341424, 299655412), (4, 1581559893, 220106707), (5, 1453201079, 1590571865), (6, 1915941033, 1171165722), (7, 186699714, 1268073012), (8, 906070221, 68252793), (9, 63989048, 201209005), (10, 469521478, 499635468), (11, 1085242217, 1292825378), (12, 56985562, 1205264595), (13, 427000597, 1537640408), (14, 1395616197, 1506083910), (15, 1170252924, 900911954), (16, 473392625, 964669077), (17, 1265438423, 597409992), (18, 1738238662, 1866808229), (19, 13955984, 1629526405), (20, 1730483679, 342865762), (21, 1499242942, 907557512), (22, 730682428, 596724164), (23, 333889689, 462382781), (24, 2055599410, 1639591159), (25, 722831293, 219494902), (26, 199170185, 815887678), (27, 207696844, 770902343), (28, 1819980298, 738639288), (29, 1296491778, 568054227), (30, 1733294784, 93309105), (31, 1567087081, 986607411))),
-    mh AS (SELECT id, i, min((a * x + b) % 2147483647) AS h FROM x CROSS JOIN params GROUP BY id, i),
-    sig AS (SELECT id, list(h ORDER BY i) AS sig FROM mh GROUP BY id),
-    banded AS (
-      SELECT id, band,
-             md5(array_to_string(sig[band*4+1:band*4+4], ',')) AS bucket
-      FROM sig CROSS JOIN (SELECT unnest(range(8)) AS band)
-    ),
-    dupes AS (
-      SELECT DISTINCT b.id AS idb FROM banded a
-      JOIN banded b ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
-    )
+    dupes AS (SELECT DISTINCT idb FROM ({minhash}))
     SELECT lang, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS total_tokens
     FROM k LEFT JOIN dupes ON k.doc_id = dupes.idb
     WHERE dupes.idb IS NULL
@@ -432,7 +357,10 @@ def _register_pipeline_curation():
     bit-identical between the standalone query and the pipeline)."""
     from wordcount_spark.operators.queries_textstats import STOPWORDS
 
-    @register("pipeline_curation", _CURATION_SQL.format(stop=STOPWORDS))
+    @register(
+        "pipeline_curation",
+        _CURATION_SQL.format(stop=STOPWORDS, minhash=_minhash_sql("k")),
+    )
     def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         """End-to-end training-data curation — the composite a 100 TB corpus
         actually runs, chaining four operators this engine already ships:
@@ -447,8 +375,9 @@ def _register_pipeline_curation():
            operators/components.py is the transitive alternative);
         4. per-lang corpus stats over the final survivors.
 
-        The oracle replays all four stages in SQL (md5-mode minhash), so the
-        whole pipeline — not just its pieces — is differentially checked.
+        The oracle replays all four stages in SQL (the `dedup_minhash_lsh`
+        rendering composed over the survivors), so the whole pipeline — not
+        just its pieces — is differentially checked.
         """
         docs = load_table(spark, sf_dir, "documents")
         toks = tokenize("text")
@@ -490,8 +419,7 @@ def _register_pipeline_curation():
             # scan+gate+exact-dedup lineage runs twice
             .transform(bounded_cache)
         )
-        sigs = minhash_signatures(doc_shingles(k), num_hashes=32, hash_mode="md5")
-        pairs = lsh_candidate_pairs(sigs, bands=8, rows=4, hash_mode="md5")
+        pairs = lsh_candidate_pairs(minhash_signatures(doc_shingle_hashes(k)))
         dupes = pairs.select(F.col("idb").alias("doc_id")).distinct()
         return (
             k.join(dupes, "doc_id", "left_anti")
@@ -1087,35 +1015,6 @@ def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dedup_minhash_lsh_incremental",
-    _minhash_sql(32, 8, 4, final=_LSH_FINAL_INCREMENTAL),
-)
-def dedup_minhash_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental near-dup: the daily-crawl shape. The delta batch
-    (doc_id % 10 = 0 here) probes the standing banded LSH index — every
-    returned pair has ≥1 new member, old×old pairs never meet in the
-    join. Same signature family and S-curve as `dedup_minhash_lsh`; the
-    oracle is the identical pipeline with the probe restriction spelled
-    in SQL.
-
-    Scale: a batch of |Δ| docs costs O(|Δ|·bands) probe rows joined
-    against the bucketed index (shuffle keyed on (band, bucket), delta
-    side tiny → AQE broadcasts it), vs O(|D|·bands) self-join for the
-    full recompute — the only affordable way to keep a 100 TB corpus
-    continuously deduped. In production the index frame is a persisted
-    table (see `lsh_banded_index`); here it is rebuilt so the query is
-    self-contained.
-    """
-    from wordcount_spark.operators.dedup import lsh_incremental_pairs
-
-    docs = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signatures(doc_shingles(docs), num_hashes=32, hash_mode="md5")
-    return lsh_incremental_pairs(
-        sigs, F.col("id") % 10 == 0, bands=8, rows=4, hash_mode="md5"
-    ).orderBy("ida", "idb")
-
-
 def _jaccard_truth_sql(threshold: float) -> str:
     return f"""
     WITH sh AS ({_SHINGLES_SQL}),
@@ -1136,7 +1035,7 @@ def _jaccard_truth_sql(threshold: float) -> str:
     "eval_lsh_candidate_recall",
     f"""
     WITH truth AS ({_jaccard_truth_sql(0.5)}),
-    cand AS (SELECT ida, idb FROM ({_minhash_sql(32, 8, 4)})),
+    cand AS (SELECT ida, idb FROM ({_minhash_sql()})),
     caught AS (SELECT * FROM truth WHERE (ida, idb) IN (SELECT (ida, idb) FROM cand))
     SELECT (SELECT count(*) FROM truth) AS n_truth,
            (SELECT count(*) FROM cand) AS n_candidates,
@@ -1424,7 +1323,7 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MINHASH_CALIB_FINAL = """
+_MINHASH_CALIB_FINAL = f"""
     , cand AS (
       SELECT DISTINCT a.id AS ida, b.id AS idb
       FROM banded a JOIN banded b
@@ -1432,22 +1331,23 @@ _MINHASH_CALIB_FINAL = """
     ),
     mtc AS (
       SELECT c.ida, c.idb,
-             len(list_filter(range(1, 33), i -> sa.sig[i] = sb.sig[i])) AS m
+             len(list_filter(range(1, {NUM_HASHES + 1}), i -> sa.sig[i] = sb.sig[i])) AS m
       FROM cand c
       JOIN sig sa ON sa.id = c.ida
       JOIN sig sb ON sb.id = c.idb
     ),
-    sizes AS (SELECT id, count(*) AS sz FROM sh GROUP BY id),
+    ssh AS ({_SHINGLES_SQL}),
+    sizes AS (SELECT id, count(*) AS sz FROM ssh GROUP BY id),
     common AS (
       SELECT a.id AS ida, b.id AS idb, count(*) AS common
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
+      FROM ssh a JOIN ssh b ON a.shingle = b.shingle AND a.id < b.id
       GROUP BY 1, 2
     )
     SELECT m.ida, m.idb,
-           CAST(m.m * 1000000 // 32 AS BIGINT) AS est_ppm,
+           CAST(m.m * 1000000 // {NUM_HASHES} AS BIGINT) AS est_ppm,
            CAST(co.common * 1000000 // (sa.sz + sb.sz - co.common) AS BIGINT)
              AS exact_ppm,
-           CAST(m.m * 1000000 // 32
+           CAST(m.m * 1000000 // {NUM_HASHES}
                 - co.common * 1000000 // (sa.sz + sb.sz - co.common)
                 AS BIGINT) AS err_ppm
     FROM mtc m
@@ -1458,7 +1358,7 @@ _MINHASH_CALIB_FINAL = """
 """
 
 
-@register("eval_minhash_jaccard_calibration", _minhash_sql(32, 8, 4, _MINHASH_CALIB_FINAL))
+@register("eval_minhash_jaccard_calibration", _minhash_sql(final=_MINHASH_CALIB_FINAL))
 def eval_minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Estimator-calibration audit: for every LSH candidate pair, the
     MinHash Jaccard ESTIMATE (matching signature positions / 32) next to
@@ -1467,8 +1367,9 @@ def eval_minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFr
     before a 100 TB run trusts signature similarity as a dedup verdict
     (E[est] = J; spread at K=32 is ±σ≈√(J(1-J)/32)≈9pp). Composed from
     the SAME signature/banding pipeline `dedup_minhash_lsh` registers,
-    so the audit cannot drift from the operator it audits; pairs with
-    zero shared shingles (possible band-hash coincidences) drop on both
+    so the audit cannot drift from the operator it audits; the exact
+    side stays on string shingles (`doc_shingles`). Pairs with zero
+    shared shingles (possible band-hash coincidences) drop on both
     engines via the inner common-join.
 
     Scale: candidates come from the sub-quadratic banded join; the
@@ -1478,8 +1379,8 @@ def eval_minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFr
     """
     docs = load_table(spark, sf_dir, "documents")
     sh = doc_shingles(docs)
-    sigs = minhash_signatures(sh, num_hashes=32, hash_mode="md5")
-    pairs = lsh_candidate_pairs(sigs, bands=8, rows=4, hash_mode="md5")
+    sigs = minhash_signatures(doc_shingle_hashes(docs))
+    pairs = lsh_candidate_pairs(sigs)
     sa = sigs.select(F.col("id").alias("ida"), F.col("signature").alias("siga"))
     sb = sigs.select(F.col("id").alias("idb"), F.col("signature").alias("sigb"))
     mtc = (
@@ -1490,7 +1391,7 @@ def eval_minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFr
             "idb",
             F.size(
                 F.filter(
-                    F.sequence(F.lit(1), F.lit(32)),
+                    F.sequence(F.lit(1), F.lit(NUM_HASHES)),
                     lambda i: F.element_at("siga", i) == F.element_at("sigb", i),
                 )
             )
@@ -1510,7 +1411,7 @@ def eval_minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFr
         .groupBy(F.col("a.id").alias("ida"), F.col("b.id").alias("idb"))
         .agg(F.count("*").alias("common"))
     )
-    est = F.expr("CAST(m * 1000000 div 32 AS BIGINT)")
+    est = F.expr(f"CAST(m * 1000000 div {NUM_HASHES} AS BIGINT)")
     exact = F.expr("CAST(common * 1000000 div (sza + szb - common) AS BIGINT)")
     return (
         mtc.join(common, ["ida", "idb"])

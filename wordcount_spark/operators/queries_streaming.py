@@ -312,7 +312,7 @@ def q_streaming_doc_quality_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
 def _lsh_full_oracle() -> str:
     from wordcount_spark.operators.queries_dedup import _minhash_sql
 
-    return _minhash_sql(32, 8, 4)
+    return _minhash_sql()
 
 
 # STRONG oracle for a streaming op: every candidate pair is emitted

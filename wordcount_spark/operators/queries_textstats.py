@@ -1843,8 +1843,8 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _hash64(col: F.Column) -> F.Column:
     """Engine-portable 60-bit token hash: leading 15 hex digits of md5,
-    parsed base-16 (same construction as operators/dedup.base_hash
-    mode='md5' — DuckDB computes the identical value with
+    parsed base-16 (the same token hash as operators/dedup.simhash —
+    DuckDB computes the identical value with
     ``('0x' || substr(md5(s),1,15))::BIGINT``). Always non-negative."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 

@@ -7,9 +7,10 @@ structs), the 8-byte/4-byte/byte tails, and the avalanche. Validated
 byte-for-byte against Spark in tests/test_xxh64_sql.py (empty / short /
 word-boundary / ≥32-byte / multi-byte-UTF-8 inputs).
 
-Why: the production MinHash path (``dedup_minhash_lsh_fast``) hashes
-tokens with xxhash64, which DuckDB lacks — this module gives that query
-a real differential oracle instead of a rows-only check. The generated
+Why: the MinHash path (``operators/dedup.py``) hashes tokens with
+xxhash64, which DuckDB lacks — this module gives every MinHash+LSH query
+(``queries_dedup._minhash_sql``) a real differential oracle instead of a
+rows-only check. The generated
 SQL is large (tens of KB) but runs only over the DISTINCT token
 vocabulary, never the corpus.
 

@@ -239,6 +239,14 @@ EVIDENCE_RESET: dict[str, int] = {
     "graph_triangle_count": 15,
     "graph_degree_distribution": 15,
     "text_heavyhitters_twopass": 15,
+    # r16: one MinHash+LSH path. Signatures hash xxhash64 token hashes
+    # combined per trigram (the md5 string-shingle family is gone), so
+    # every LSH candidate set and the oracles that replay it changed
+    "dedup_minhash_lsh": 16,
+    "pipeline_curation": 16,
+    "eval_lsh_candidate_recall": 16,
+    "eval_minhash_jaccard_calibration": 16,
+    "streaming_lsh_incremental": 16,
 }
 
 

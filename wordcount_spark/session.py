@@ -11,8 +11,9 @@ chosen so the same logical plans scale to a real cluster:
   columnar-batched instead of row-pickled.
 - session timezone pinned UTC so timestamp semantics match the DuckDB
   oracle and are cluster-location-independent.
-- codegen cache sized to the registry's working set: a cold sweep of all
-  265 registry queries at sf0.001 compiles 2,582 distinct classes, and
+- codegen cache sized to the registry's working set: a cold sweep of the
+  registry at sf0.001 (265 queries when measured) compiled 2,582 distinct
+  classes, and
   the headline three alone ~120, past Spark's default LRU of 100, so
   every warm pass recompiled (and re-JITted) almost all of them. Class
   names leave out the codegen stage number, so one pipeline is one cache

@@ -480,8 +480,8 @@ def streaming_lsh_index_maintenance(
     """Near-dup detection as a stream: ``foreachBatch`` maintains the
     standing banded MinHash-LSH index and, per micro-batch of new
     documents, emits the candidate pairs the batch creates — the
-    continuously-deduped-crawl shape (`dedup_minhash_lsh_incremental` is
-    the one-shot delta analog; this is its streaming closure).
+    continuously-deduped-crawl shape (`dedup_minhash_lsh` is the one-shot
+    batch twin).
 
     Per batch: signature → banded rows for the NEW docs only; probe them
     against the index state UNIONED with themselves (so new×old and
@@ -496,7 +496,7 @@ def streaming_lsh_index_maintenance(
     State: banded index is O(docs × bands) — the table a production
     pipeline persists anyway; pairs state is O(candidate pairs)."""
     from wordcount_spark.operators.dedup import (
-        doc_shingles,
+        doc_shingle_hashes,
         lsh_banded_index,
         minhash_signatures,
     )
@@ -522,8 +522,7 @@ def streaming_lsh_index_maintenance(
     }
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        sigs = minhash_signatures(doc_shingles(batch), num_hashes=32, hash_mode="md5")
-        banded = lsh_banded_index(sigs, bands=8, rows=4, hash_mode="md5")
+        banded = lsh_banded_index(minhash_signatures(doc_shingle_hashes(batch)))
         build = state["index"].unionByName(
             banded.select(F.col("id"), F.col("band").cast("int"), "bucket")
         )
